@@ -370,12 +370,30 @@ object CowTable {
   private def stageChangeLog(
       spark: SparkSession, root: String, id: Long,
       before: DataFrame, after: DataFrame, keyCols: Seq[String]): Path = {
-    val staging = new Path(
-      s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
+    val staging = changeStaging(root, id)
     Cdc.changelogSigned(before, after, keyCols, ChangeOper)
       .write.mode("overwrite").parquet(staging.toString)
     staging
   }
+
+  /** Stage a changelog whose operations are known per frame — the
+    * MOR/DV commits' pure-D deletes and D(old)/I(new) updates, which
+    * need no diff join. Columns in canonical sidecar order: `m`'s
+    * table schema, then `_oper`.
+    */
+  private def stageChangeRows(spark: SparkSession, root: String, id: Long,
+      m: CowManifest, rows: (DataFrame, String)*): Path = {
+    val staging = changeStaging(root, id)
+    rows.map { case (df, op) =>
+      df.withColumn(ChangeOper, lit(op))
+        .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
+    }.reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(staging.toString)
+    staging
+  }
+
+  private def changeStaging(root: String, id: Long) =
+    new Path(s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
 
   private def publishChangeLog(
       spark: SparkSession, root: String, id: Long, staging: Path): Unit = {
@@ -617,6 +635,11 @@ object CowTable {
 
   /** Spec hook: manifest PARSES (Spark parquet jobs) per qualified
     * root — `DeltaManifestSpec` pins one parse per (root, id) per JVM.
+    * This and the other per-root spec counters ([[prunedLoads]],
+    * [[entriesMaterialized]], [[sidecarLoads]]) are consumed as
+    * MONOTONIC deltas, so they never clear: a clear between two reads
+    * would report fewer events than happened. They hold one small
+    * entry per distinct table root this JVM ever read.
     */
   private[graft] val manifestParses =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
@@ -718,9 +741,6 @@ object CowTable {
     hit match {
       case Some((_, m)) => m
       case None =>
-        // diagnostics only — bounded unlike the LRU'd memo (a long
-        // driver over many ephemeral roots must not grow it forever)
-        if (manifestParses.size > 1024) manifestParses.clear()
         manifestParses.merge(qroot, 1L, (a, b) => a + b)
         // a committed checkpoint short-circuits the delta chain: the
         // full resolved list in one parse, no base needed (what lets
@@ -1050,8 +1070,6 @@ object CowTable {
         .where(col("kind") =!= KindData || pushed)
         .drop(meta.partCols.map(c => s"__pp_$c"): _*)
         .collect().toSeq
-      if (prunedLoads.size > 1024) prunedLoads.clear()
-      if (entriesMaterialized.size > 1024) entriesMaterialized.clear()
       prunedLoads.merge(qroot, 1L, (a, b) => a + b)
       entriesMaterialized.merge(qroot, rows.length.toLong, (a, b) => a + b)
       CowManifest(id, meta.partCols, meta.schemaDdl, filesOfRows(rows),
@@ -1123,7 +1141,6 @@ object CowTable {
               else {
                 val rows = entriesFrame(spark, root, id, meta.partCols)
                   .where(col("kind") =!= KindData).collect().toSeq
-                if (sidecarLoads.size > 1024) sidecarLoads.clear()
                 sidecarLoads.merge(qroot, 1L, (a, b) => a + b)
                 filesOfRows(rows)
               }
@@ -1407,8 +1424,7 @@ object CowTable {
     * trivially because the file list IS one previously-committed
     * consistent snapshot.
     *
-    * Concurrency: the same per-id lease + manifest-lock critical
-    * section as every commit; `basedOn` is the current snapshot
+    * Concurrency: a [[transact]] commit based on the current snapshot
     * observed at entry, so a commit racing the restore makes exactly
     * one of the two win ([[CowConcurrentCommitException]] for the
     * other). Restoring to the CURRENT snapshot is a no-op (returns
@@ -1429,17 +1445,13 @@ object CowTable {
     if (toId == cur) return cur
     val newId = cur + 1
     val target = manifest(spark, root, toId)
-    val base = manifest(spark, root, cur)
-    acquireCommitLock(spark, root, newId)
-    try {
-      commitManifest(spark, root, newId, Some(cur), None) {
-        writeManifest(spark, root, newId, target.partCols,
-          target.schemaDdl, target.allFiles, mappingOf(Some(target)))
-      }
-    } finally releaseCommitLock(spark, root, newId)
-    vacuum(spark, root, keep, Map(
-      newId -> target.allFiles.map(_.path),
-      cur -> base.allFiles.map(_.path)))
+    if (!transact(spark, root, newId, keep, Some(manifest(spark, root, cur)))(
+        _ => Some(CowCommit(target.partCols, target.schemaDdl,
+          mappingOf(Some(target)), adds = target.allFiles, carried = Nil,
+          statsPreserved = false))))
+      throw new CowConcurrentCommitException(
+        s"restore at $root: commit $newId landed while acquiring the " +
+          "lease — retry against the new head")
     newId
   }
 
@@ -1564,13 +1576,12 @@ object CowTable {
       // before the clone's first commit (setBucketSpec's own rule)
       bucketSpecOf(spark, sourceRoot)
         .foreach(bs => setBucketSpec(spark, targetRoot, bs))
-      acquireCommitLock(spark, targetRoot, 1L)
-      try {
-        commitManifest(spark, targetRoot, 1L, None, None) {
-          writeManifest(spark, targetRoot, 1L, m.partCols, m.schemaDdl,
-            entries, mappingOf(Some(m)))
-        }
-      } finally releaseCommitLock(spark, targetRoot, 1L)
+      if (!transact(spark, targetRoot, 1L, keep = 2, None)(_ =>
+          Some(CowCommit(m.partCols, m.schemaDdl, mappingOf(Some(m)),
+            adds = entries, carried = Nil))))
+        throw new CowConcurrentCommitException(
+          s"shallow clone target $targetRoot: a concurrent writer " +
+            "committed its first snapshot")
       cloneCommitted = true
       // provenance at the target: what releaseCloneFence / DROP reads.
       // Written AFTER the commit — a crash in between leaves a clone
@@ -1729,42 +1740,30 @@ object CowTable {
     */
   def evolveSchema(
       spark: SparkSession, root: String, id: Long,
-      newSchema: StructType, keep: Int = 2): Boolean = {
-    require(keep >= 1, "must keep at least the current snapshot")
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    m.schema.fieldNames.foreach(c =>
-      require(newSchema.fieldNames.contains(c),
-        s"schema evolution is grow-only: column $c would be dropped " +
-          "(drops/renames would orphan carried files' data — rewrite " +
-          "via commitFull under the new schema instead)"))
-    newSchema.fields.filterNot(f => m.schema.fieldNames.contains(f.name))
-      .foreach(f => require(f.nullable,
-        s"added column ${f.name} must be nullable: carried files hold " +
-          "no values for it, so existing rows read it as NULL"))
-    val eff = effSchemaOf(Some(m), newSchema)
-    validateEvolution(m, eff, m.partCols)
-    if (eff.toDDL == m.schemaDdl) return true // no-op ALTER — id unconsumed
-    val unsafe = bloomUnsafeCols(m, eff)
-    val files = m.allFiles.map(stripUnsafeStats(_, unsafe))
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      commitManifest(spark, root, id, Some(m.id), None) {
+      newSchema: StructType, keep: Int = 2): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      m.schema.fieldNames.foreach(c =>
+        require(newSchema.fieldNames.contains(c),
+          s"schema evolution is grow-only: column $c would be dropped " +
+            "(drops/renames would orphan carried files' data — rewrite " +
+            "via commitFull under the new schema instead)"))
+      newSchema.fields.filterNot(f => m.schema.fieldNames.contains(f.name))
+        .foreach(f => require(f.nullable,
+          s"added column ${f.name} must be nullable: carried files hold " +
+            "no values for it, so existing rows read it as NULL"))
+      val eff = effSchemaOf(Some(m), newSchema)
+      validateEvolution(m, eff, m.partCols)
+      if (eff.toDDL == m.schemaDdl) None // no-op ALTER — id unconsumed
+      else {
         // a pure ADD/widen that drops no carried stats changes no
         // entry — the schema rides the delta's own header
-        if (deltaEligible(Some(m), m.partCols, unsafe.isEmpty))
-          writeManifestDelta(spark, root, id, m, eff.toDDL,
-            Nil, Set.empty, mappingForAdds(Some(m), eff))
-        else writeManifest(spark, root, id, m.partCols, eff.toDDL, files,
-          mappingForAdds(Some(m), eff))
+        val unsafe = bloomUnsafeCols(m, eff)
+        Some(CowCommit(m.partCols, eff.toDDL, mappingForAdds(Some(m), eff),
+          adds = Nil, carried = m.allFiles.map(stripUnsafeStats(_, unsafe)),
+          statsPreserved = unsafe.isEmpty))
       }
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> files.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
-  }
+    }
 
   /** Column names a CHECK-constraint predicate references (top-level
     * attribute parts of the parsed expression).
@@ -1796,79 +1795,69 @@ object CowTable {
     */
   def renameColumn(
       spark: SparkSession, root: String, id: Long,
-      oldName: String, newName: String, keep: Int = 2): Boolean = {
-    require(keep >= 1, "must keep at least the current snapshot")
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    require(m.schema.fieldNames.contains(oldName),
-      s"RENAME COLUMN: no column $oldName at $root")
-    require(!m.schema.fieldNames.exists(_.equalsIgnoreCase(newName)),
-      s"RENAME COLUMN: column $newName already exists at $root")
-    bucketSpecOf(spark, root).foreach(bs =>
-      require(!(bs.keyCols :+ bs.partCol).contains(oldName),
-        s"RENAME COLUMN $oldName: the registered bucket layout " +
-          "references it (bucket file tags and the planner spec are " +
-          "name-anchored) — rewrite under the new shape instead"))
-    val fs = hfs(spark, root)
-    val changes = new Path(root, ChangesDir)
-    require(!fs.exists(changes) || fs.listStatus(changes).isEmpty,
-      s"RENAME COLUMN at $root: retained change-feed sidecars exist — " +
-        "they store write-time column names that feed readers request " +
-        "under the current schema; VACUUM past them (or rebuild feed " +
-        "consumers), then rename")
-    val newSchema = StructType(m.schema.fields.map(f =>
-      if (f.name == oldName) f.copy(name = newName) else f))
-    val newMap = (m.colMap - oldName) + (newName -> m.phys(oldName))
-    def rekey[V](mm: Map[String, V]): Map[String, V] =
-      mm.map { case (k, v) =>
-        (if (k == oldName) newName else k) -> v }
-    val files = m.allFiles.map(f => f.copy(
-      part = rekey(f.part), mins = rekey(f.mins), maxs = rekey(f.maxs),
-      blooms = rekey(f.blooms), nulls = rekey(f.nulls)))
-    val newPartCols =
-      m.partCols.map(c => if (c == oldName) newName else c)
-    // constraints re-point by parse → transform → re-render, made
-    // ATOMIC with the manifest commit via the PENDING protocol (round
-    // 15, closing the round-14 crash window): the repointed set lands
-    // as `_checks.tsv.pending-<id>` BEFORE the manifest (under the
-    // per-id lease, so no other writer can take the id meanwhile) and
-    // is adopted — one atomic rename — right after; a crash between
-    // the two is HEALED lazily by [[checkConstraints]], which adopts a
-    // pending whose rename demonstrably committed (the id's manifest
-    // carries the new name and not the old) and discards one whose id
-    // went to some other statement. No observer can see a committed
-    // rename with un-repointed constraints.
-    val checks = checkConstraints(spark, root)
-    val repointed = checks.map { case (n, sql) =>
-      if (!constraintRefs(spark, sql).exists(_.equalsIgnoreCase(oldName)))
-        n -> sql
-      else n -> spark.sessionState.sqlParser.parseExpression(sql)
-        .transform {
-          case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-              if u.nameParts.head.equalsIgnoreCase(oldName) =>
-            org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-              newName +: u.nameParts.tail)
-        }.sql
-    }
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+      oldName: String, newName: String, keep: Int = 2): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      require(m.schema.fieldNames.contains(oldName),
+        s"RENAME COLUMN: no column $oldName at $root")
+      require(!m.schema.fieldNames.exists(_.equalsIgnoreCase(newName)),
+        s"RENAME COLUMN: column $newName already exists at $root")
+      bucketSpecOf(spark, root).foreach(bs =>
+        require(!(bs.keyCols :+ bs.partCol).contains(oldName),
+          s"RENAME COLUMN $oldName: the registered bucket layout " +
+            "references it (bucket file tags and the planner spec are " +
+            "name-anchored) — rewrite under the new shape instead"))
+      val fs = hfs(spark, root)
+      val changes = new Path(root, ChangesDir)
+      require(!fs.exists(changes) || fs.listStatus(changes).isEmpty,
+        s"RENAME COLUMN at $root: retained change-feed sidecars exist — " +
+          "they store write-time column names that feed readers request " +
+          "under the current schema; VACUUM past them (or rebuild feed " +
+          "consumers), then rename")
+      val newSchema = StructType(m.schema.fields.map(f =>
+        if (f.name == oldName) f.copy(name = newName) else f))
+      val newMap = (m.colMap - oldName) + (newName -> m.phys(oldName))
+      def rekey[V](mm: Map[String, V]): Map[String, V] =
+        mm.map { case (k, v) =>
+          (if (k == oldName) newName else k) -> v }
+      val files = m.allFiles.map(f => f.copy(
+        part = rekey(f.part), mins = rekey(f.mins), maxs = rekey(f.maxs),
+        blooms = rekey(f.blooms), nulls = rekey(f.nulls)))
+      val newPartCols =
+        m.partCols.map(c => if (c == oldName) newName else c)
+      // constraints re-point by parse → transform → re-render, made
+      // ATOMIC with the manifest commit via the PENDING protocol (no
+      // crash window between the two): the repointed set lands
+      // as `_checks.tsv.pending-<id>` BEFORE the manifest (under the
+      // per-id lease, so no other writer can take the id meanwhile) and
+      // is adopted — one atomic rename — right after; a crash between
+      // the two is HEALED lazily by [[checkConstraints]], which adopts a
+      // pending whose rename demonstrably committed (the id's manifest
+      // carries the new name and not the old) and discards one whose id
+      // went to some other statement. No observer can see a committed
+      // rename with un-repointed constraints.
+      val checks = checkConstraints(spark, root)
+      val repointed = checks.map { case (n, sql) =>
+        if (!constraintRefs(spark, sql).exists(_.equalsIgnoreCase(oldName)))
+          n -> sql
+        else n -> spark.sessionState.sqlParser.parseExpression(sql)
+          .transform {
+            case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+                if u.nameParts.head.equalsIgnoreCase(oldName) =>
+              org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
+                newName +: u.nameParts.tail)
+          }.sql
+      }
+      // the pending set lands under the lease, BEFORE the manifest; the
+      // settle hook adopts it once the manifest landed, or drops it
       if (repointed != checks)
         writePendingChecks(spark, root, id, oldName, newName, repointed)
-      try commitManifest(spark, root, id, Some(m.id), None) {
-        writeManifest(spark, root, id, newPartCols, newSchema.toDDL,
-          files, (newMap, m.retiredPhys))
-      } catch { case t: Throwable =>
-        fs.delete(pendingChecksPath(root, id), false)
-        throw t
-      }
-      if (repointed != checks) adoptPendingChecks(spark, root, id)
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> files.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
-  }
+      Some(CowCommit(newPartCols, newSchema.toDDL, (newMap, m.retiredPhys),
+        adds = Nil, carried = files, statsPreserved = false,
+        settle = landed =>
+          if (!landed) fs.delete(pendingChecksPath(root, id), false)
+          else if (repointed != checks) adoptPendingChecks(spark, root, id)))
+    }
 
   // ---- pending-constraint protocol (atomic RENAME re-point) ----
 
@@ -2016,42 +2005,28 @@ object CowTable {
   def reorderColumn(
       spark: SparkSession, root: String, id: Long,
       name: String, afterOrFirst: Option[String],
-      keep: Int = 2): Boolean = {
-    require(keep >= 1, "must keep at least the current snapshot")
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    require(m.schema.fieldNames.contains(name),
-      s"ALTER COLUMN position: no column $name at $root")
-    afterOrFirst.foreach(a =>
-      require(m.schema.fieldNames.contains(a) && a != name,
-        s"ALTER COLUMN $name AFTER $a: no such (distinct) column"))
-    val moved = m.schema.fields.find(_.name == name).get
-    val rest = m.schema.fields.filterNot(_.name == name)
-    val newFields = afterOrFirst match {
-      case None => moved +: rest
-      case Some(a) =>
-        val i = rest.indexWhere(_.name == a)
-        (rest.take(i + 1) :+ moved) ++ rest.drop(i + 1)
-    }
-    val newSchema = StructType(newFields)
-    if (newSchema.toDDL == m.schemaDdl) return true // no-op
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      commitManifest(spark, root, id, Some(m.id), None) {
-        // a reorder changes no entry at all — pure schema delta
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, newSchema.toDDL,
-            Nil, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, newSchema.toDDL,
-          m.allFiles, mappingOf(Some(m)))
+      keep: Int = 2): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      require(m.schema.fieldNames.contains(name),
+        s"ALTER COLUMN position: no column $name at $root")
+      afterOrFirst.foreach(a =>
+        require(m.schema.fieldNames.contains(a) && a != name,
+          s"ALTER COLUMN $name AFTER $a: no such (distinct) column"))
+      val moved = m.schema.fields.find(_.name == name).get
+      val rest = m.schema.fields.filterNot(_.name == name)
+      val newFields = afterOrFirst match {
+        case None => moved +: rest
+        case Some(a) =>
+          val i = rest.indexWhere(_.name == a)
+          (rest.take(i + 1) :+ moved) ++ rest.drop(i + 1)
       }
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> m.allFiles.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
-  }
+      val newSchema = StructType(newFields)
+      // a reorder changes no entry at all — pure schema delta
+      if (newSchema.toDDL == m.schemaDdl) None // no-op
+      else Some(CowCommit(m.partCols, newSchema.toDDL, mappingOf(Some(m)),
+        adds = Nil, carried = m.allFiles))
+    }
 
   /** `ALTER TABLE … DROP COLUMN` as a METADATA-ONLY commit: carried
     * files keep the bytes (readers simply stop requesting the
@@ -2063,59 +2038,49 @@ object CowTable {
     */
   def dropColumn(
       spark: SparkSession, root: String, id: Long,
-      name: String, keep: Int = 2): Boolean = {
-    require(keep >= 1, "must keep at least the current snapshot")
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    require(m.schema.fieldNames.contains(name),
-      s"DROP COLUMN: no column $name at $root")
-    require(!m.partCols.contains(name),
-      s"DROP COLUMN $name: partition columns are the table's layout — " +
-        "rewrite under a new partitioning instead")
-    require(m.schema.fields.length > 1,
-      s"DROP COLUMN $name would leave the table without columns")
-    bucketSpecOf(spark, root).foreach(bs =>
-      require(!(bs.keyCols :+ bs.partCol).contains(name),
-        s"DROP COLUMN $name: the registered bucket layout references " +
-          "it — rewrite under the new shape instead"))
-    // outstanding full-row tombstones carry the column's bytes and
-    // subtract by equality against a frame that would no longer have
-    // it (every read fails — or, after a re-ADD, matches the WRONG
-    // column); fold the debt first
-    require(m.tombstones.isEmpty,
-      s"DROP COLUMN $name at $root: outstanding merge-on-read " +
-        "tombstones reference the current columns — run OPTIMIZE to " +
-        "fold them, then drop")
-    // retained change-feed sidecars store the column's write-time
-    // values; a DROP + re-ADD would resurrect them through the feed
-    val changesDir = new Path(root, ChangesDir)
-    val dropFs = hfs(spark, root)
-    require(!dropFs.exists(changesDir) ||
-        dropFs.listStatus(changesDir).isEmpty,
-      s"DROP COLUMN at $root: retained change-feed sidecars exist — " +
-        "VACUUM past them (or rebuild feed consumers), then drop")
-    val checks = checkConstraints(spark, root)
-    checks.foreach { case (n, sql) =>
-      require(!constraintRefs(spark, sql).exists(_.equalsIgnoreCase(name)),
-        s"DROP COLUMN $name: CHECK constraint $n references it — " +
-          s"ALTER TABLE … DROP CONSTRAINT $n first") }
-    val newSchema = StructType(m.schema.fields.filterNot(_.name == name))
-    val files = m.allFiles.map(f => f.copy(
-      mins = f.mins - name, maxs = f.maxs - name,
-      blooms = f.blooms - name, nulls = f.nulls - name))
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      commitManifest(spark, root, id, Some(m.id), None) {
-        writeManifest(spark, root, id, m.partCols, newSchema.toDDL,
-          files, (m.colMap - name, m.retiredPhys :+ m.phys(name)))
-      }
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, Map(
-      id -> files.map(_.path), m.id -> m.allFiles.map(_.path)))
-    true
-  }
+      name: String, keep: Int = 2): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      require(m.schema.fieldNames.contains(name),
+        s"DROP COLUMN: no column $name at $root")
+      require(!m.partCols.contains(name),
+        s"DROP COLUMN $name: partition columns are the table's layout — " +
+          "rewrite under a new partitioning instead")
+      require(m.schema.fields.length > 1,
+        s"DROP COLUMN $name would leave the table without columns")
+      bucketSpecOf(spark, root).foreach(bs =>
+        require(!(bs.keyCols :+ bs.partCol).contains(name),
+          s"DROP COLUMN $name: the registered bucket layout references " +
+            "it — rewrite under the new shape instead"))
+      // outstanding full-row tombstones carry the column's bytes and
+      // subtract by equality against a frame that would no longer have
+      // it (every read fails — or, after a re-ADD, matches the WRONG
+      // column); fold the debt first
+      require(m.tombstones.isEmpty,
+        s"DROP COLUMN $name at $root: outstanding merge-on-read " +
+          "tombstones reference the current columns — run OPTIMIZE to " +
+          "fold them, then drop")
+      // retained change-feed sidecars store the column's write-time
+      // values; a DROP + re-ADD would resurrect them through the feed
+      val changesDir = new Path(root, ChangesDir)
+      val dropFs = hfs(spark, root)
+      require(!dropFs.exists(changesDir) ||
+          dropFs.listStatus(changesDir).isEmpty,
+        s"DROP COLUMN at $root: retained change-feed sidecars exist — " +
+          "VACUUM past them (or rebuild feed consumers), then drop")
+      val checks = checkConstraints(spark, root)
+      checks.foreach { case (n, sql) =>
+        require(!constraintRefs(spark, sql).exists(_.equalsIgnoreCase(name)),
+          s"DROP COLUMN $name: CHECK constraint $n references it — " +
+            s"ALTER TABLE … DROP CONSTRAINT $n first") }
+      val newSchema = StructType(m.schema.fields.filterNot(_.name == name))
+      val files = m.allFiles.map(f => f.copy(
+        mins = f.mins - name, maxs = f.maxs - name,
+        blooms = f.blooms - name, nulls = f.nulls - name))
+      Some(CowCommit(m.partCols, newSchema.toDDL,
+        (m.colMap - name, m.retiredPhys :+ m.phys(name)),
+        adds = Nil, carried = files, statsPreserved = false))
+    }
 
   // -------------------------------------------------------------------
   // CHECK constraints (Delta's ALTER TABLE ADD CONSTRAINT): named SQL
@@ -2754,37 +2719,35 @@ object CowTable {
       where: Option[Column] = None): MaintStatus = {
     require(zCols.nonEmpty, "OPTIMIZE ZORDER needs clustering columns")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    if (committedIds(spark, root).exists(_ >= id)) return MaintSuperseded
-    val m = currentManifest(spark, root).getOrElse(return MaintNoOp)
-    if (m.files.isEmpty) return MaintNoOp
-    zCols.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"z-order column $c is not a table column"))
-    // partition-scoped form (`OPTIMIZE … WHERE p`): recluster ONLY the
-    // matching partitions — boundaries, bin budget and the touched set
-    // all derive from the scoped files, everything else carries by
-    // manifest reference (at 100 TB, re-Z-ordering a hot day must not
-    // rewrite the year)
-    val scope = where.map(partitionsMatching(spark, m, _))
-    val files = m.files.filter(f => scope.forall(_.contains(m.partKeyOf(f))))
-    if (files.isEmpty) return MaintNoOp
-    val all = resolved(spark, root, m, files)
-    val z = ZOrder.zvalue(zCols.map(col),
-      ZOrder.boundariesFor(all, zCols, bits), bits)
-    val totalBins = math.max(1L,
-      (files.map(_.bytes).sum + targetFileBytes - 1) / targetFileBytes)
-    val touched = m.allFiles
-      .filter(f => scope.forall(_.contains(m.partKeyOf(f))))
-      .map(m.partKeyOf).toSet
-    // ownership rides through: false from the commit is a lost race
-    // (a concurrent writer took this id between our guard and the
-    // lease), and reporting it as success would hide a skipped
-    // optimize behind a "done" — the silent-supersede hole the
-    // ownership contract exists to close
-    if (commitPartitionsFrom(Some(m), all.withColumn("__z", z), touched,
-        root, id, m.partCols, keep, changeLogKeys = changeLogKeys,
-        split = Some(("__z", math.min(totalBins, 1L << 20).toInt))))
-      MaintCommitted
-    else MaintSuperseded
+    maintain(spark, root, id, keep) { m =>
+      if (m.files.isEmpty) None
+      else {
+        zCols.foreach(c => require(m.schema.fieldNames.contains(c),
+          s"z-order column $c is not a table column"))
+        // partition-scoped form (`OPTIMIZE … WHERE p`): recluster ONLY
+        // the matching partitions — boundaries, bin budget and the
+        // touched set all derive from the scoped files, everything else
+        // carries by manifest reference (at 100 TB, re-Z-ordering a hot
+        // day must not rewrite the year)
+        val scope = where.map(partitionsMatching(spark, m, _))
+        val files =
+          m.files.filter(f => scope.forall(_.contains(m.partKeyOf(f))))
+        if (files.isEmpty) None
+        else {
+          val all = resolved(spark, root, m, files)
+          val z = ZOrder.zvalue(zCols.map(col),
+            ZOrder.boundariesFor(all, zCols, bits), bits)
+          val totalBins = math.max(1L,
+            (files.map(_.bytes).sum + targetFileBytes - 1) / targetFileBytes)
+          val touched = m.allFiles
+            .filter(f => scope.forall(_.contains(m.partKeyOf(f))))
+            .map(m.partKeyOf).toSet
+          Some(rewriteCommit(Some(m), all.withColumn("__z", z), touched,
+            root, id, m.partCols, changeLogKeys = changeLogKeys,
+            split = Some(("__z", math.min(totalBins, 1L << 20).toInt))))
+        }
+      }
+    }
   }
 
   /** Filesystem ↔ manifest integrity audit (fsck). Reports, without
@@ -3771,18 +3734,6 @@ object CowTable {
     sys.props.get("graft.cow.manifest.checkpoint")
       .flatMap(_.toIntOption).getOrElse(8)
 
-  /** May a commit against `base` write a DELTA manifest? Requires an
-    * unchanged partitioning (deltas carry entries by reference under
-    * the base's partition keys), `statsPreserved` (carried entries
-    * byte-identical — a widening that drops carried blooms/min-max
-    * must rewrite every entry, i.e. checkpoint), and chain headroom.
-    */
-  private def deltaEligible(base: Option[CowManifest],
-      partCols: Seq[String], statsPreserved: Boolean): Boolean =
-    statsPreserved && base.exists(b =>
-      b.partCols == partCols &&
-        b.chainDepth < manifestCheckpointInterval)
-
   private def mbaseMarker(root: String, id: Long, baseId: Long) =
     new Path(root, s"$MbasePrefix$id=$baseId")
 
@@ -3792,10 +3743,10 @@ object CowTable {
     * lands FIRST (create-before-manifest: a committed delta ALWAYS has
     * its marker, so [[vacuum]]'s chain-retention rule can never
     * misread a delta as a full manifest and prune its base; a crashed
-    * attempt's orphan marker is swept like a dead lease). The caller
-    * guarantees [[deltaEligible]] and that the final entry list equals
-    * `base.allFiles -- removedParts ++ adds` with carried entries
-    * byte-identical.
+    * attempt's orphan marker is swept like a dead lease). Called only
+    * by [[transact]], whose delta rule guarantees that the final entry
+    * list equals `base.allFiles -- removedParts ++ adds` with carried
+    * entries byte-identical.
     */
   private def writeManifestDelta(
       spark: SparkSession, root: String, id: Long, base: CowManifest,
@@ -3878,24 +3829,6 @@ object CowTable {
   // Commit concurrency: per-id lease + based-on verification
   // -------------------------------------------------------------------
 
-  /** Opt-in SINGLE-WRITER fast path (-Dgraft.cow.singleWriter=true):
-    * the operator guarantees exactly one writer process per table, so
-    * the per-id lease and the table-wide manifest lock — whose only
-    * job is excluding CONCURRENT writers — are skipped, saving four
-    * filesystem round-trips per commit (two create-if-absent, two
-    * deletes; each ~50-100 ms on an object store, where they dominate
-    * a small commit's latency). Based-on verification still runs (it
-    * is a pure listing), so a VIOLATED promise — two writers despite
-    * the flag — still fails loud on any interleaving the listing
-    * observes; only the narrow verify→publish window the lock closes
-    * is reopened, which is exactly the contract the flag's name
-    * states. Default off; the oracle queries and specs exercise the
-    * locked path.
-    */
-  private def singleWriter: Boolean =
-    sys.props.get("graft.cow.singleWriter")
-      .exists(v => v == "true" || v == "1")
-
   private def lockPath(root: String, id: Long) =
     new Path(s"$root/_commit-$id.lock")
 
@@ -3960,7 +3893,6 @@ object CowTable {
 
   private def acquireCommitLock(
       spark: SparkSession, root: String, id: Long): Unit = {
-    if (singleWriter) return
     atomicCreate(spark, root, lockPath(root, id),
       new CowConcurrentCommitException(
         s"commit $id at $root: another writer holds the id lease — " +
@@ -3970,7 +3902,6 @@ object CowTable {
 
   private def releaseCommitLock(
       spark: SparkSession, root: String, id: Long): Unit = {
-    if (singleWriter) return
     hfs(spark, root).delete(lockPath(root, id), false)
   }
 
@@ -3991,7 +3922,6 @@ object CowTable {
     */
   private def acquireManifestLock(
       spark: SparkSession, root: String, id: Long): Unit = {
-    if (singleWriter) return
     val waitSec = sys.props.get("graft.cow.manifestLockWaitSec")
       .flatMap(_.toLongOption).getOrElse(60L)
     val deadline = System.nanoTime() + waitSec * 1000000000L
@@ -4005,7 +3935,7 @@ object CowTable {
         case e: CowConcurrentCommitException =>
           if (System.nanoTime() >= deadline)
             throw new CowConcurrentCommitException(
-              s"commit $id at $root: manifest lock held for >60s — a " +
+              s"commit $id at $root: manifest lock held for >${waitSec}s — a " +
                 "crashed writer may have leaked it; repair via " +
                 "breakManifestLock after confirming no writer is live")
           Thread.sleep(50)
@@ -4014,7 +3944,6 @@ object CowTable {
   }
 
   private def releaseManifestLock(spark: SparkSession, root: String): Unit = {
-    if (singleWriter) return
     hfs(spark, root).delete(manifestLockPath(root), false)
   }
 
@@ -4032,8 +3961,130 @@ object CowTable {
   def breakManifestLock(spark: SparkSession, root: String): Boolean =
     hfs(spark, root).delete(manifestLockPath(root), false)
 
-  // ---- shared commit-protocol pieces (commitPartitions/commitAppend
-  // must never drift apart on these) ----
+  // -------------------------------------------------------------------
+  // The commit path: every snapshot this table publishes goes through
+  // [[transact]] (Delta's OptimisticTransaction: an operation reads a
+  // base snapshot and produces actions; the transaction owns the rest)
+  // -------------------------------------------------------------------
+
+  /** One commit's actions. `carried` is what a FULL manifest keeps
+    * from the base; `adds` and `removedParts` are what a DELTA
+    * manifest records against it. `statsPreserved` states that
+    * `carried` is exactly the base's entries outside `removedParts`,
+    * byte-identical — false when the commit re-keys, strips or replaces
+    * them. `settle` runs under the lease once the publish is decided:
+    * true after the manifest landed, false when it failed (the failure
+    * then rethrows).
+    */
+  private final case class CowCommit(
+      partCols: Seq[String],
+      schemaDdl: String,
+      mapping: (Map[String, String], Seq[String]),
+      adds: Seq[CowFile],
+      carried: Seq[CowFile],
+      removedParts: Set[String] = Set.empty,
+      statsPreserved: Boolean = true,
+      stagedLog: Option[Path] = None,
+      settle: Boolean => Unit = _ => ())
+
+  /** The commit that only ADDS entries to `m` (tombstones, deletion
+    * vectors, MOR new images): every base entry carries verbatim.
+    */
+  private def addingTo(m: CowManifest, adds: Seq[CowFile],
+      stagedLog: Option[Path]): CowCommit =
+    CowCommit(m.partCols, m.schemaDdl, mappingOf(Some(m)), adds, m.allFiles,
+      stagedLog = stagedLog)
+
+  /** Spec seam: runs with the table root after a transaction's build
+    * and before its manifest critical section — the window where a
+    * spec lands a competing commit to fail the based-on verification
+    * of any entry point.
+    */
+  @volatile private[graft] var beforePublishForTest: String => Unit = _ => ()
+
+  /** The base of a commit that needs an existing table. */
+  private def headOf(base: Option[CowManifest], root: String): CowManifest =
+    base.getOrElse(throw new IllegalStateException(
+      s"no committed snapshot at $root"))
+
+  /** Commit `id` on the current head: ONE committed-id listing serves
+    * both the replay guard and the base snapshot `build` reads.
+    */
+  private def transact(spark: SparkSession, root: String, id: Long,
+      keep: Int)(build: Option[CowManifest] => Option[CowCommit]): Boolean = {
+    val ids = committedIds(spark, root)
+    !ids.exists(_ >= id) && transact(spark, root, id, keep,
+      ids.lastOption.map(manifest(spark, root, _)))(build)
+  }
+
+  /** Commit `id` on `base` — the snapshot the caller computed from.
+    *
+    *  1. Replay guard: false when `base` is already at or past `id`.
+    *  1. The per-id lease ([[acquireCommitLock]]), then a re-check of
+    *     the committed ids: a racer (or replay) may have committed `id`
+    *     while we waited. Only the id matters, so this is a listing,
+    *     not a manifest read.
+    *  1. `build(base)` writes the commit's files and returns its
+    *     actions, or None when there is nothing to commit — the id
+    *     stays unconsumed and the call returns true.
+    *  1. Under the table-wide manifest lock ([[acquireManifestLock]]):
+    *     based-on verification (the head is still `base`, else
+    *     [[CowConcurrentCommitException]] with the staged sidecar
+    *     discarded and nothing published), sidecar publish, manifest
+    *     write.
+    *  1. Release, then vacuum with the manifests this writer holds in
+    *     memory, so the post-commit vacuum re-reads none.
+    *
+    * The manifest is a DELTA against `base` (O(adds + removed
+    * partitions) rows, the shape that holds at millions of files) when
+    * the carried entries are byte-identical (`statsPreserved`), the
+    * partitioning is unchanged (deltas carry entries by reference
+    * under the base's partition keys) and the chain is shorter than
+    * [[manifestCheckpointInterval]]; otherwise it is FULL, which
+    * checkpoints the chain.
+    */
+  private def transact(spark: SparkSession, root: String, id: Long,
+      keep: Int, base: Option[CowManifest])(
+      build: Option[CowManifest] => Option[CowCommit]): Boolean = {
+    require(keep >= 1, "must keep at least the current snapshot")
+    if (base.exists(_.id >= id)) return false
+    var known: Option[Map[Long, Seq[String]]] = None
+    acquireCommitLock(spark, root, id)
+    try {
+      if (committedIds(spark, root).exists(_ >= id)) return false
+      build(base).foreach { c =>
+        beforePublishForTest(root)
+        try {
+          acquireManifestLock(spark, root, id)
+          try {
+            val latest = committedIds(spark, root).lastOption
+            if (latest != base.map(_.id)) {
+              discardChangeLog(spark, root, c.stagedLog)
+              throw new CowConcurrentCommitException(
+                s"commit $id at $root: based on snapshot ${base.map(_.id)} " +
+                  s"but current is $latest — recompute against the new " +
+                  "base and retry (nothing was published)")
+            }
+            c.stagedLog.foreach(publishChangeLog(spark, root, id, _))
+            base.filter(b => c.statsPreserved && b.partCols == c.partCols &&
+                b.chainDepth < manifestCheckpointInterval) match {
+              case Some(b) => writeManifestDelta(spark, root, id, b,
+                c.schemaDdl, c.adds, c.removedParts, c.mapping)
+              case None => writeManifest(spark, root, id, c.partCols,
+                c.schemaDdl, c.carried ++ c.adds, c.mapping)
+            }
+          } finally releaseManifestLock(spark, root)
+        } catch { case t: Throwable => c.settle(false); throw t }
+        c.settle(true)
+        known = Some(Map(id -> (c.carried ++ c.adds).map(_.path)) ++
+          base.map(b => b.id -> b.allFiles.map(_.path)))
+      }
+    } finally releaseCommitLock(spark, root, id)
+    known.foreach(vacuum(spark, root, keep, _))
+    true
+  }
+
+  // ---- shared schema pieces of the commit builds ----
 
   /** The committed schema: proposed fields with nullability widened to
     * the grow-only union (carried files may hold NULLs a stricter
@@ -4161,17 +4212,10 @@ object CowTable {
     * change — carried blooms on such columns are dropped (pruning
     * degrades, correctness holds; integer widenings keep theirs).
     *
-    * CONCURRENCY: commits are optimistic. The per-id lease
-    * ([[acquireCommitLock]]) makes same-id races one-winner — the
-    * loser throws [[CowConcurrentCommitException]] before writing
-    * anything. Cross-id races (two writers committing different ids
-    * against the same base snapshot) are excluded by the table-wide
-    * [[acquireManifestLock]]: based-on verification (current manifest
-    * still the snapshot `carried` was computed from) and the manifest
-    * write sit in one short critical section, so the window where two
-    * different-id writers both pass the check cannot exist. A failed
-    * verification aborts with the same exception, sidecar unpublished,
-    * and the caller recomputes against the new base.
+    * CONCURRENCY: optimistic, through [[transact]]. A lost race (same
+    * id, or a commit landing on the base) throws
+    * [[CowConcurrentCommitException]] with nothing published, and the
+    * caller recomputes against the new base.
     *
     * `changeLogKeys` (non-empty = enabled) emits the batch's signed
     * row-level changelog ([[Cdc.changelogSigned]] of the touched
@@ -4179,7 +4223,7 @@ object CowTable {
     * the `_changes/<id>/` sidecar, published atomically only when the
     * commit's verification passes — the write-time feed [[changeFeed]]
     * then serves without diffing snapshots. Cost: one delta-sized join
-    * over the touched partitions, outside every lock.
+    * over the touched partitions, outside the manifest lock.
     *
     * OWNERSHIP CONTRACT (every commit/DML entry point shares it):
     * returns TRUE when this call's effect is in the table — a
@@ -4206,22 +4250,19 @@ object CowTable {
       bloomCols: Seq[String] = Nil,
       changeLogKeys: Seq[String] = Nil,
       split: Option[(String, Int)] = None): Boolean =
-    commitPartitionsFrom(currentManifest(rewrite.sparkSession, root),
-      rewrite, touched, root, id, partCols, keep, sortCols, bloomCols,
-      changeLogKeys, split)
+    transact(rewrite.sparkSession, root, id, keep)(base =>
+      Some(rewriteCommit(base, rewrite, touched, root, id, partCols,
+        sortCols, bloomCols, changeLogKeys, split)))
 
   /** [[commitPartitions]] against an EXPLICIT base manifest — the one
-    * the caller computed `rewrite`/`touched` from. Every derived entry
-    * point (upsert, applyCdc, fold, compact, …) reads the manifest
-    * once, computes its rewrite from it, and passes that SAME manifest
-    * here, so the based-on verification in [[commitManifest]] checks
-    * against the snapshot the rewrite actually used. Re-reading
-    * `currentManifest` at commit time instead would open a lost-update
-    * window: a concurrent commit landing between the caller's read and
-    * the re-read would pass verification and have its changes to the
-    * touched partitions silently overwritten. Carried files and the
-    * changelog before-state come from this same manifest for the same
-    * reason.
+    * the caller computed `rewrite`/`touched` from, so the based-on
+    * verification checks against the snapshot the rewrite actually
+    * used. Re-reading `currentManifest` at commit time instead would
+    * open a lost-update window: a concurrent commit landing between the
+    * caller's read and the re-read would pass verification and have its
+    * changes to the touched partitions silently overwritten. Carried
+    * files and the changelog before-state come from this same manifest
+    * for the same reason.
     */
   private[graft] def commitPartitionsFrom(
       base: Option[CowManifest],
@@ -4237,8 +4278,32 @@ object CowTable {
       split: Option[(String, Int)] = None,
       relayout: Boolean = false,
       touchedFromWritten: Boolean = false,
-      validateWritten: Seq[CowFile] => Unit = _ => ()): Boolean = {
-    require(keep >= 1, "must keep at least the current snapshot")
+      validateWritten: Seq[CowFile] => Unit = _ => ()): Boolean =
+    transact(rewrite.sparkSession, root, id, keep, base)(_ =>
+      Some(rewriteCommit(base, rewrite, touched, root, id, partCols,
+        sortCols, bloomCols, changeLogKeys, split, relayout,
+        touchedFromWritten, validateWritten)))
+
+  /** The actions of a partition-rewriting commit on `prev`: `rewrite`
+    * is the full new content of the `touched` partitions, every other
+    * partition carries by reference (see [[commitPartitions]]). The
+    * shared build of upsert, mergeInto, applyCdc, deleteWhere,
+    * updateWhere, compaction, Z-order, fold and commitFull.
+    */
+  private def rewriteCommit(
+      prev: Option[CowManifest],
+      rewrite: DataFrame,
+      touched: Set[String],
+      root: String,
+      id: Long,
+      partCols: Seq[String],
+      sortCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil,
+      changeLogKeys: Seq[String] = Nil,
+      split: Option[(String, Int)] = None,
+      relayout: Boolean = false,
+      touchedFromWritten: Boolean = false,
+      validateWritten: Seq[CowFile] => Unit = _ => ()): CowCommit = {
     // touchedFromWritten: `touched` is only the EXTRA partitions to
     // drop (a replaceWhere region, a declared static spec); the full
     // touched set is derived from the files the batch write actually
@@ -4255,16 +4320,9 @@ object CowTable {
     // schema is the rewrite WITHOUT it
     val payload = split.map { case (s, _) => rewrite.drop(s) }
       .getOrElse(rewrite)
-    val prev = base
-    // filled on commit success: the manifests this writer holds in
-    // memory, so the post-commit vacuum re-reads none (see vacuum)
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    // replay guard — see scaladoc: rewriting a committed batch's files
-    // would rename them out from under later manifests
-    if (prev.exists(_.id >= id)) return false
-    // CHECK constraints: one batch-sized pass, outside every lock (in
-    // touchedFromWritten mode the pass runs over the WRITTEN files
-    // instead — see below — so the input query evaluates exactly once)
+    // CHECK constraints: one batch-sized pass (in touchedFromWritten
+    // mode the pass runs over the WRITTEN files instead — see below —
+    // so the input query evaluates exactly once)
     if (!touchedFromWritten)
       enforceChecks(payload, checkConstraints(spark, root),
         s"commit $id at $root")
@@ -4282,156 +4340,101 @@ object CowTable {
     prev.foreach(p => validateEvolution(p, effSchema, partCols,
       fullRewrite = relayout &&
         p.allFiles.map(p.partKeyOf).toSet.subsetOf(touched)))
-    acquireCommitLock(spark, root, id)
-    try {
-      // post-lease recheck: a racer (or replay) may have committed this
-      // id while we raced for the lease — same no-op as the replay
-      // guard. Only the ID matters, so this is a pure FS listing
-      // (committedIds), not a manifest read — keeping a Spark job out
-      // of every commit
-      if (committedIds(spark, root).exists(_ >= id)) return false
-      val batchDir = s"$root/$BatchPrefix$id"
-      // a FRESH `_retrykeep-<id>` marker shields a parked retry / WAP
-      // re-point stage's ONLY data under batch-<id>; the overwrite
-      // below would destroy it (r19 review: the commitAppendOnto /
-      // stageAppend guard applied to the DML/full-rewrite path too —
-      // upsert, applyCdc, deleteKeysMor, commitFull all land here).
-      // KNOWN WINDOW (ADVICE r19, best-effort by design): markers are
-      // created by retry claim() WITHOUT the commit lock, so one
-      // appearing between this check and writeBatch below is still
-      // overwritten — the same check-then-write window as the
-      // pre-existing stageAppend guard. Closing it would require
-      // claim() to take the per-id commit lock, serializing every
-      // retry attempt behind unrelated commits; the retry path's own
-      // id-skip (appendWithRetryImpl avoids ids under foreign fresh
-      // markers) keeps the window to a crash-then-reclaim race.
-      if (freshRetryKeep(hfs(spark, root), root, id))
-        throw new CowConcurrentCommitException(
-          s"commit $id at $root: an in-flight retry holds this id's " +
-            "batch dir — commit under a different id")
-      writeBatch(rewrite, batchDir, partCols, sortCols, split,
-        colMap = commitMapping._1)
-      // bloom columns INHERIT from the previous snapshot when the caller
-      // doesn't name any: a table committed with blooms must not quietly
-      // lose its point-lookup pruning every time a merge or fold
-      // rewrites a partition
-      val effBloomCols =
-        if (bloomCols.nonEmpty) bloomCols
-        else prev.toSeq.flatMap(_.files.flatMap(_.blooms.keys)).distinct
-          .filter(effSchema.fieldNames.contains)
-      val fresh = collectEntries(spark, batchDir, id, effSchema, partCols,
-        effBloomCols, colMap = commitMapping._1)
-      // written-derived touched set: partitions come from the batch
-      // files just landed (their manifest entries carry the partition
-      // values), so the committed set can never disagree with the
-      // committed rows; validation and the CHECK scan read those same
-      // files — batch-sized IO, no re-evaluation of the input query
-      val allTouched =
-        if (!touchedFromWritten) touched
-        else {
-          // a refused batch must not leave its staged files behind:
-          // the id was not consumed, so a LATER attempt reuses this
-          // batch dir — the static-mode overwrite in writeBatch
-          // replaces it whole, but deleting here keeps failed
-          // statements free of disk debris (same cleanup the DV/MOR
-          // abort paths perform)
-          try {
-            validateWritten(fresh)
-            if (fresh.nonEmpty)
-              enforceChecks(
-                dfFor(spark, root,
-                  CowManifest(id, partCols, effSchema.toDDL, fresh,
-                    commitMapping._1, commitMapping._2),
-                  fresh),
-                checkConstraints(spark, root), s"commit $id at $root")
-          } catch { case t: Throwable =>
-            hfs(spark, root).delete(new Path(batchDir), true)
-            throw t
-          }
-          touched ++ fresh.map(f => partKey(partCols, f.part))
+    val batchDir = s"$root/$BatchPrefix$id"
+    // a FRESH `_retrykeep-<id>` marker shields a parked retry / WAP
+    // re-point stage's ONLY data under batch-<id>; the overwrite
+    // below would destroy it (appendCommit has the same guard).
+    // KNOWN WINDOW (best-effort by design): markers are created by
+    // retry claim() WITHOUT the commit lock, so one appearing between
+    // this check and writeBatch below is still overwritten. Closing it
+    // would require claim() to take the per-id commit lock, serializing
+    // every retry attempt behind unrelated commits; the retry path's
+    // own id-skip (appendWithRetryImpl avoids ids under foreign fresh
+    // markers) keeps the window to a crash-then-reclaim race.
+    if (freshRetryKeep(hfs(spark, root), root, id))
+      throw new CowConcurrentCommitException(
+        s"commit $id at $root: an in-flight retry holds this id's " +
+          "batch dir — commit under a different id")
+    writeBatch(rewrite, batchDir, partCols, sortCols, split,
+      colMap = commitMapping._1)
+    // bloom columns INHERIT from the previous snapshot when the caller
+    // doesn't name any: a table committed with blooms must not quietly
+    // lose its point-lookup pruning every time a merge or fold
+    // rewrites a partition
+    val effBloomCols =
+      if (bloomCols.nonEmpty) bloomCols
+      else prev.toSeq.flatMap(_.files.flatMap(_.blooms.keys)).distinct
+        .filter(effSchema.fieldNames.contains)
+    val fresh = collectEntries(spark, batchDir, id, effSchema, partCols,
+      effBloomCols, colMap = commitMapping._1)
+    // written-derived touched set: partitions come from the batch
+    // files just landed (their manifest entries carry the partition
+    // values), so the committed set can never disagree with the
+    // committed rows; validation and the CHECK scan read those same
+    // files — batch-sized IO, no re-evaluation of the input query
+    val allTouched =
+      if (!touchedFromWritten) touched
+      else {
+        // a refused batch must not leave its staged files behind:
+        // the id was not consumed, so a LATER attempt reuses this
+        // batch dir — the static-mode overwrite in writeBatch
+        // replaces it whole, but deleting here keeps failed
+        // statements free of disk debris (same cleanup the DV/MOR
+        // abort paths perform)
+        try {
+          validateWritten(fresh)
+          if (fresh.nonEmpty)
+            enforceChecks(
+              dfFor(spark, root,
+                CowManifest(id, partCols, effSchema.toDDL, fresh,
+                  commitMapping._1, commitMapping._2),
+                fresh),
+              checkConstraints(spark, root), s"commit $id at $root")
+        } catch { case t: Throwable =>
+          hfs(spark, root).delete(new Path(batchDir), true)
+          throw t
         }
-      // carry untouched DATA files and untouched partitions' tombstones;
-      // a touched partition's tombstones retire here — its rewrite was
-      // computed from the RESOLVED base, so they are folded in. Widened
-      // columns whose string form changed lose their carried blooms AND
-      // min/max stats (see bloomUnsafeCols): a float-era stat "0.1"
-      // understates the upcast double 0.10000000149…, so an envelope
-      // test against it could FALSE-SKIP the file, and a manifest-served
-      // extreme would disagree with the scan. A dropped stat only
-      // widens (the file is kept, the aggregate refuses) — never wrong.
-      val bloomUnsafe = prev.map(bloomUnsafeCols(_, effSchema))
-        .getOrElse(Set.empty[String])
-      val carried = prev.map(p =>
-        p.allFiles.filterNot(f => allTouched.contains(p.partKeyOf(f)))
-          .map(stripUnsafeStats(_, bloomUnsafe))
-      ).getOrElse(Nil)
-      // the changelog JOIN runs here, outside the manifest lock; only
-      // the rename publishes it
-      val stagedLog =
-        if (changeLogKeys.isEmpty) None
-        else {
-          val newDdl = effSchema.toDDL
-          // before-state read under the NEW schema (old files upcast),
-          // so the signed changelog is well-typed across evolution
-          val before = prev.map(p => resolved(spark, root,
-            p.copy(schemaDdl = newDdl),
-            p.files.filter(f => allTouched.contains(p.partKeyOf(f)))))
-          val stub = CowManifest(id, partCols, newDdl, fresh,
-            commitMapping._1, commitMapping._2)
-          val after = dfFor(spark, root, stub, stub.files)
-          Some(stageChangeLog(spark, root, id,
-            before.getOrElse(after.limit(0)), after, changeLogKeys))
-        }
-      commitManifest(spark, root, id, prev.map(_.id), stagedLog) {
-        // DELTA when the carried entries are byte-identical to the
-        // base's (no stat-dropping widening, no relayout): O(touched)
-        // manifest rows instead of O(table files) — the commit-IO
-        // shape that holds at millions of files; a full manifest
-        // checkpoints the chain every manifestCheckpointInterval links
-        if (!relayout &&
-            deltaEligible(prev, partCols, bloomUnsafe.isEmpty))
-          writeManifestDelta(spark, root, id, prev.get, effSchema.toDDL,
-            fresh, allTouched, commitMapping)
-        else
-          writeManifest(spark, root, id, partCols, effSchema.toDDL,
-            fresh ++ carried, commitMapping)
+        touched ++ fresh.map(f => partKey(partCols, f.part))
       }
-      vacuumKnown = Map(id -> (fresh ++ carried).map(_.path)) ++
-        prev.map(p => p.id -> p.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
-  }
-
-  /** The shared critical section every commit path ends with: under
-    * the table-wide manifest lock, verify the current manifest is
-    * still `basedOn` (cross-id lost-update guard — see
-    * [[acquireManifestLock]]), publish the staged changelog sidecar if
-    * any, and run the manifest write. On a failed verification the
-    * staged sidecar is discarded and nothing was published.
-    */
-  private def commitManifest(
-      spark: SparkSession, root: String, id: Long,
-      basedOn: Option[Long], stagedLog: Option[Path])(
-      writeManifestBody: => Unit): Unit = {
-    acquireManifestLock(spark, root, id)
-    try {
-      // only the latest ID is compared, so the verification is a pure
-      // FS listing — no manifest parquet read (a Spark job) inside the
-      // critical section
-      val latest = committedIds(spark, root).lastOption
-      if (latest != basedOn) {
-        discardChangeLog(spark, root, stagedLog)
-        throw new CowConcurrentCommitException(
-          s"commit $id at $root: based on snapshot $basedOn but current " +
-            s"is $latest — recompute against the new base " +
-            "and retry (nothing was published)")
+    // carry untouched DATA files and untouched partitions' tombstones;
+    // a touched partition's tombstones retire here — its rewrite was
+    // computed from the RESOLVED base, so they are folded in. Widened
+    // columns whose string form changed lose their carried blooms AND
+    // min/max stats (see bloomUnsafeCols): a float-era stat "0.1"
+    // understates the upcast double 0.10000000149…, so an envelope
+    // test against it could FALSE-SKIP the file, and a manifest-served
+    // extreme would disagree with the scan. A dropped stat only
+    // widens (the file is kept, the aggregate refuses) — never wrong.
+    val bloomUnsafe = prev.map(bloomUnsafeCols(_, effSchema))
+      .getOrElse(Set.empty[String])
+    val carried = prev.map(p =>
+      p.allFiles.filterNot(f => allTouched.contains(p.partKeyOf(f)))
+        .map(stripUnsafeStats(_, bloomUnsafe))
+    ).getOrElse(Nil)
+    // the changelog JOIN runs here, outside the manifest lock; only
+    // the rename publishes it
+    val stagedLog =
+      if (changeLogKeys.isEmpty) None
+      else {
+        val newDdl = effSchema.toDDL
+        // before-state read under the NEW schema (old files upcast),
+        // so the signed changelog is well-typed across evolution
+        val before = prev.map(p => resolved(spark, root,
+          p.copy(schemaDdl = newDdl),
+          p.files.filter(f => allTouched.contains(p.partKeyOf(f)))))
+        val stub = CowManifest(id, partCols, newDdl, fresh,
+          commitMapping._1, commitMapping._2)
+        val after = dfFor(spark, root, stub, stub.files)
+        Some(stageChangeLog(spark, root, id,
+          before.getOrElse(after.limit(0)), after, changeLogKeys))
       }
-      stagedLog.foreach(publishChangeLog(spark, root, id, _))
-      writeManifestBody
-    } finally releaseManifestLock(spark, root)
+    // DELTA only when the carried entries are byte-identical to the
+    // base's (no stat-dropping widening, no relayout)
+    CowCommit(partCols, effSchema.toDDL, commitMapping, adds = fresh,
+      carried = carried, removedParts = allTouched,
+      statsPreserved = !relayout && bloomUnsafe.isEmpty,
+      stagedLog = stagedLog)
   }
-
 
   /** The pure-I changelog sidecar for an APPEND of `fresh` files onto
     * base `p`, or None when an appended key overlaps an incumbent (the
@@ -4542,10 +4545,9 @@ object CowTable {
     * periodic repair, and the per-file manifest stats keep skipping
     * sharp in between.
     *
-    * Same lease + based-on verification as [[commitPartitions]]; same
-    * [[SchemaCompat]] evolution gate. `changeLogKeys` emits the
-    * sidecar feed as pure `I` rows of the batch (no diff join — an
-    * append IS its own changelog). The pure-I form is only correct
+    * Same [[SchemaCompat]] evolution gate as [[commitPartitions]].
+    * `changeLogKeys` emits the sidecar feed as pure `I` rows of the
+    * batch (no diff join — an append IS its own changelog). The pure-I form is only correct
     * when appended keys are NEW, which insert-only ingest guarantees —
     * and the commit VERIFIES it cheaply (batch keys semi-joined
     * against the touched partitions' visible rows): a batch that
@@ -4563,22 +4565,10 @@ object CowTable {
       sortCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       changeLogKeys: Seq[String] = Nil,
-      changeLogRequired: Boolean = false): Boolean = {
-    require(keep >= 1, "must keep at least the current snapshot")
-    val spark = batch.sparkSession
-    val prev = currentManifest(spark, root)
-    if (prev.exists(_.id >= id)) return false
-    prev match {
-      case None =>
-        // first commit: an append to nothing is the initial snapshot
-        commitPartitionsFrom(None, batch, Set.empty, root, id, partCols,
-          keep, sortCols, bloomCols, changeLogKeys)
-      case Some(p) =>
-        commitAppendOnto(batch, root, id, p, partCols, keep, sortCols,
-          bloomCols, changeLogKeys, changeLogRequired,
-          reuse = None, recordStaged = _ => ())
-    }
-  }
+      changeLogRequired: Boolean = false): Boolean =
+    transact(batch.sparkSession, root, id, keep)(base =>
+      Some(appendCommit(batch, root, id, base, partCols, sortCols,
+        bloomCols, changeLogKeys, changeLogRequired)))
 
   /** A batch STAGED by a failed [[appendWithRetry]] attempt, carried to
     * the next one: the data files under `batch-<batchId>/` plus their
@@ -4597,25 +4587,28 @@ object CowTable {
       writeColMap: Map[String, String],
       checks: Map[String, String])
 
-  /** One append attempt of `batch` onto base `p` as commit `id` — the
-    * shared body of [[commitAppend]] (reuse = None: byte-identical to
-    * the pre-retry path) and [[appendWithRetry]] (reuse carries a prior
-    * attempt's staged files across a lost race). Returns false when the
-    * replay guard fired (a commit with this id or later landed first);
-    * throws [[CowConcurrentCommitException]] on a lost lease or failed
-    * based-on verification. `recordStaged` fires once the batch's data
-    * files and entries are durable — BEFORE the manifest race — so the
-    * caller still holds the handle when the race is lost.
+  /** The actions of one append of `batch` as commit `id` — shared by
+    * [[commitAppend]] and [[stageAppend]] (reuse = None) and the retry
+    * loops ([[appendWithRetry]], [[publishStagedWithRetry]]: reuse
+    * carries a prior attempt's staged files across a lost race). Onto no base,
+    * an append is the initial snapshot. `recordStaged` fires once the
+    * batch's data files and entries are durable — BEFORE the manifest
+    * race — so the caller still holds the handle when the race is
+    * lost.
     */
-  private def commitAppendOnto(
-      batch: DataFrame, root: String, id: Long, p: CowManifest,
-      partCols: Seq[String], keep: Int, sortCols: Seq[String],
+  private def appendCommit(
+      batch: DataFrame, root: String, id: Long, base: Option[CowManifest],
+      partCols: Seq[String], sortCols: Seq[String],
       bloomCols: Seq[String], changeLogKeys: Seq[String],
       changeLogRequired: Boolean,
-      reuse: Option[StagedAppendBatch],
-      recordStaged: StagedAppendBatch => Unit,
+      reuse: Option[StagedAppendBatch] = None,
+      recordStaged: StagedAppendBatch => Unit = _ => (),
       protectStage: Boolean = false,
-      onStagedForTest: () => Unit = () => ()): Boolean = {
+      onStagedForTest: () => Unit = () => ()): CowCommit = {
+    if (base.isEmpty)
+      return rewriteCommit(None, batch, Set.empty, root, id, partCols,
+        sortCols, bloomCols, changeLogKeys)
+    val p = base.get
     val spark = batch.sparkSession
     val checks = checkConstraints(spark, root)
     if (reuse.isEmpty)
@@ -4623,184 +4616,169 @@ object CowTable {
     val effSchema = effSchemaOf(Some(p), batch.schema)
     validateEvolution(p, effSchema, partCols)
     val commitMapping = mappingForAdds(Some(p), effSchema)
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var committed = false
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false // ID-only recheck: FS listing, no Spark job
-      val batchDir = s"$root/$BatchPrefix$id"
-      val fs = hfs(spark, root)
-      if (!protectStage) {
-        // explicit-id writers (the streaming sink's pinned-id protocol
-        // can legitimately target any future id) must honor a FRESH
-        // `_retrykeep-<id>` marker exactly as stageAppend does: in the
-        // crash window of publishStagedWithRetry the marked dir holds
-        // an adopted stage's ONLY data, and writeBatch below would
-        // overwrite it (ADVICE r18). Stale markers are crashed
-        // leftovers vacuum sweeps.
+    val batchDir = s"$root/$BatchPrefix$id"
+    val fs = hfs(spark, root)
+    if (!protectStage) {
+      // explicit-id writers (the streaming sink's pinned-id protocol
+      // can legitimately target any future id) must honor a FRESH
+      // `_retrykeep-<id>` marker exactly as stageAppend does: in the
+      // crash window of publishStagedWithRetry the marked dir holds
+      // an adopted stage's ONLY data, and writeBatch below would
+      // overwrite it. Stale markers are crashed
+      // leftovers vacuum sweeps.
+      if (freshRetryKeep(fs, root, id))
+        throw new CowConcurrentCommitException(
+          s"commit $id at $root: an in-flight retry holds this id's " +
+            "batch dir — commit under a different id")
+    } else {
+      // a PENDING WAP STAGE parked on this very id: batch-<id> is
+      // that stage's only data and the restage below would overwrite
+      // it — lose loudly so the retry loop re-picks (its id choice
+      // skips parked stages; this closes the list-then-stage race)
+      if (fs.exists(stagedMetaPath(root, id)))
+        throw new CowConcurrentCommitException(
+          s"commit $id at $root: a pending WAP stage is parked on " +
+            "this id — retry against the next id")
+      // CLAIM the dir before any file lands, and shield it from
+      // vacuum: the moment a competing commit advances the frontier
+      // past our id, an unmarked batch dir is vacuum bait — and the
+      // winner's post-commit vacuum runs immediately. The claim is
+      // create-if-absent: an EXISTING fresh marker is another
+      // in-flight retry's moved data parked at this id
+      // — overwriting it would destroy that retry's only copy, so
+      // lose loudly instead; a stale marker is a crashed retry's
+      // leftover and is swept then re-claimed. (A vacuum that listed
+      // markers before this create can still reap a dir it listed
+      // after — that worst case loses this attempt's staging work,
+      // never correctness: the competing commit that armed the
+      // vacuum fails our based-on check anyway.)
+      def claim(): Boolean =
+        try { fs.create(retryKeepPath(root, id), false).close(); true }
+        catch { case _: java.io.IOException => false }
+      if (!claim()) {
         if (freshRetryKeep(fs, root, id))
           throw new CowConcurrentCommitException(
-            s"commit $id at $root: an in-flight retry holds this id's " +
-              "batch dir — commit under a different id")
-      }
-      if (protectStage) {
-        // a PENDING WAP STAGE parked on this very id: batch-<id> is
-        // that stage's only data and the restage below would overwrite
-        // it — lose loudly so the retry loop re-picks (its id choice
-        // skips parked stages; this closes the list-then-stage race)
-        if (fs.exists(stagedMetaPath(root, id)))
+            s"commit $id at $root: another in-flight retry holds " +
+              "this id's batch dir — retry against the next id")
+        fs.delete(retryKeepPath(root, id), false)
+        if (!claim())
           throw new CowConcurrentCommitException(
-            s"commit $id at $root: a pending WAP stage is parked on " +
-              "this id — retry against the next id")
-        // CLAIM the dir before any file lands, and shield it from
-        // vacuum: the moment a competing commit advances the frontier
-        // past our id, an unmarked batch dir is vacuum bait — and the
-        // winner's post-commit vacuum runs immediately. The claim is
-        // create-if-absent: an EXISTING fresh marker is another
-        // in-flight retry's moved data parked at this id (review r18)
-        // — overwriting it would destroy that retry's only copy, so
-        // lose loudly instead; a stale marker is a crashed retry's
-        // leftover and is swept then re-claimed. (A vacuum that listed
-        // markers before this create can still reap a dir it listed
-        // after — that worst case loses this attempt's staging work,
-        // never correctness: the competing commit that armed the
-        // vacuum fails our based-on check anyway.)
-        def claim(): Boolean =
-          try { fs.create(retryKeepPath(root, id), false).close(); true }
-          catch { case _: java.io.IOException => false }
-        if (!claim()) {
-          if (freshRetryKeep(fs, root, id))
-            throw new CowConcurrentCommitException(
-              s"commit $id at $root: another in-flight retry holds " +
-                "this id's batch dir — retry against the next id")
-          fs.delete(retryKeepPath(root, id), false)
-          if (!claim())
-            throw new CowConcurrentCommitException(
-              s"commit $id at $root: lost the batch-dir claim race — " +
-                "retry against the next id")
-        }
+            s"commit $id at $root: lost the batch-dir claim race — " +
+              "retry against the next id")
       }
-      // ADOPT a prior attempt's staged batch when the new base still
-      // presents the schema and physical mapping the files were written
-      // under — a concurrent winner that evolved either invalidates the
-      // stage (the files' layout or the entries' stat keys would lie).
-      // The move is ONE directory rename; a concurrent vacuum racing
-      // the old name (its id fell behind the new frontier the moment
-      // the winner committed) can tear the source mid-move, so adoption
-      // confirms every staged file arrived before trusting the rename —
-      // the renamed dir itself is safe from any LATER sweep (its id is
-      // ahead of every frontier this commit can lose to and still win).
-      val adopted: Option[Seq[CowFile]] = reuse
-        .filter(s => s.effSchemaDdl == effSchema.toDDL &&
-          s.writeColMap == commitMapping._1)
-        .flatMap { s =>
-          val moved: Option[Seq[CowFile]] =
-            if (s.batchId == id) Some(s.fresh)
-            else {
-              val src = new Path(s"$root/$BatchPrefix${s.batchId}")
-              val dst = new Path(batchDir)
-              // move under the SOURCE id's lease: a gap-id stage's dir
-              // (id still ahead of the frontier) is legitimately
-              // claimable by a writer of that very id, whose overwrite
-              // interleaving with a bare check-then-rename could move
-              // ITS files into our commit (review r18). The lease
-              // closes the window — ids ahead of the frontier are
-              // exactly the ones vacuum never sweeps leases for, and a
-              // claimant holding it makes us refuse (None) instead of
-              // racing. Behind-the-frontier ids (the appendWithRetry
-              // shape) have no live claimants (the pre-stage replay
-              // guard), so the lease there is uncontended by
-              // construction.
-              val leased =
-                try { acquireCommitLock(spark, root, s.batchId); true }
-                catch { case _: CowConcurrentCommitException => false }
-              if (!leased) None
-              else try {
-                // the source dir must still hold OUR staged files: a
-                // racer that already committed s.batchId overwrote the
-                // dir with its own batch — renaming that would corrupt
-                // the racer's snapshot. File names are UUID-unique, so
-                // per-file existence is ownership. (A pending stage
-                // parked at the TARGET id already threw up-front.)
-                val ours = s.fresh.forall(f =>
-                  fs.exists(new Path(s"$root/${f.path}")))
-                if (!ours) None
-                else {
-                  // a crashed leftover under OUR leased id would make
-                  // the rename nest src INSIDE it (Hadoop local-fs
-                  // semantics); nothing live writes batch-<id> while
-                  // we hold the id lease
-                  if (fs.exists(dst)) fs.delete(dst, true)
-                  val ok = try fs.rename(src, dst)
-                    catch { case scala.util.control.NonFatal(_) => false }
-                  if (!ok) None
-                  else Some(s.fresh.map(f => f.copy(path =
-                    s"$BatchPrefix$id/" +
-                      f.path.stripPrefix(s"$BatchPrefix${s.batchId}/"))))
-                }
-              } finally releaseCommitLock(spark, root, s.batchId)
-            }
-          moved.filter(_.forall(f =>
-            fs.exists(new Path(s"$root/${f.path}"))))
-        }
-      // the OLD staged dir's marker is done either way: adopted means
-      // the files now live under batch-<id> (its own marker above);
-      // refused means the stage is abandoned and vacuum should reclaim
-      reuse.filter(_.batchId != id).foreach(s =>
-        fs.delete(retryKeepPath(root, s.batchId), false))
-      adopted.foreach { _ =>
-        // the constraint set may have changed while retrying: re-check
-        // the rows exactly as staged (the batch DF may be
-        // nondeterministic upstream; the files are what commits)
-        if (reuse.exists(_.checks != checks))
-          enforceChecks(readLogical(spark, Seq(batchDir), effSchema,
-            commitMapping._1), checks, s"append retry $id at $root")
+    }
+    // ADOPT a prior attempt's staged batch when the new base still
+    // presents the schema and physical mapping the files were written
+    // under — a concurrent winner that evolved either invalidates the
+    // stage (the files' layout or the entries' stat keys would lie).
+    // The move is ONE directory rename; a concurrent vacuum racing
+    // the old name (its id fell behind the new frontier the moment
+    // the winner committed) can tear the source mid-move, so adoption
+    // confirms every staged file arrived before trusting the rename —
+    // the renamed dir itself is safe from any LATER sweep (its id is
+    // ahead of every frontier this commit can lose to and still win).
+    val adopted: Option[Seq[CowFile]] = reuse
+      .filter(s => s.effSchemaDdl == effSchema.toDDL &&
+        s.writeColMap == commitMapping._1)
+      .flatMap { s =>
+        val moved: Option[Seq[CowFile]] =
+          if (s.batchId == id) Some(s.fresh)
+          else {
+            val src = new Path(s"$root/$BatchPrefix${s.batchId}")
+            val dst = new Path(batchDir)
+            // move under the SOURCE id's lease: a gap-id stage's dir
+            // (id still ahead of the frontier) is legitimately
+            // claimable by a writer of that very id, whose overwrite
+            // interleaving with a bare check-then-rename could move
+            // ITS files into our commit. The lease
+            // closes the window — ids ahead of the frontier are
+            // exactly the ones vacuum never sweeps leases for, and a
+            // claimant holding it makes us refuse (None) instead of
+            // racing. Behind-the-frontier ids (the appendWithRetry
+            // shape) have no live claimants (the pre-stage replay
+            // guard), so the lease there is uncontended by
+            // construction. The one lease taken outside transact: it
+            // guards the SOURCE id's dir, not the id this commit
+            // publishes.
+            val leased =
+              try { acquireCommitLock(spark, root, s.batchId); true }
+              catch { case _: CowConcurrentCommitException => false }
+            if (!leased) None
+            else try {
+              // the source dir must still hold OUR staged files: a
+              // racer that already committed s.batchId overwrote the
+              // dir with its own batch — renaming that would corrupt
+              // the racer's snapshot. File names are UUID-unique, so
+              // per-file existence is ownership. (A pending stage
+              // parked at the TARGET id already threw up-front.)
+              val ours = s.fresh.forall(f =>
+                fs.exists(new Path(s"$root/${f.path}")))
+              if (!ours) None
+              else {
+                // a crashed leftover under OUR leased id would make
+                // the rename nest src INSIDE it (Hadoop local-fs
+                // semantics); nothing live writes batch-<id> while
+                // we hold the id lease
+                if (fs.exists(dst)) fs.delete(dst, true)
+                val ok = try fs.rename(src, dst)
+                  catch { case scala.util.control.NonFatal(_) => false }
+                if (!ok) None
+                else Some(s.fresh.map(f => f.copy(path =
+                  s"$BatchPrefix$id/" +
+                    f.path.stripPrefix(s"$BatchPrefix${s.batchId}/"))))
+              }
+            } finally releaseCommitLock(spark, root, s.batchId)
+          }
+        moved.filter(_.forall(f =>
+          fs.exists(new Path(s"$root/${f.path}"))))
       }
-      val fresh = adopted.getOrElse {
-        if (reuse.exists(_.checks != checks))
-          enforceChecks(batch, checks, s"append $id at $root")
-        writeBatch(batch, batchDir, partCols, sortCols,
-          colMap = commitMapping._1)
-        val effBloomCols =
-          if (bloomCols.nonEmpty) bloomCols
-          else p.files.flatMap(_.blooms.keys).distinct
-            .filter(effSchema.fieldNames.contains)
-        collectEntries(spark, batchDir, id, effSchema,
-          partCols, effBloomCols, colMap = commitMapping._1)
-      }
-      recordStaged(StagedAppendBatch(id, fresh, effSchema.toDDL,
-        commitMapping._1, checks))
-      onStagedForTest()
-      // carried files lose blooms AND min/max stats on string-form-
-      // changing widenings exactly as in commitPartitions (a stale
-      // bloom would false-negative against probes hashed under the
-      // new schema; a stale stat would false-skip the envelope test)
-      val bloomUnsafe = bloomUnsafeCols(p, effSchema)
-      val carried = p.allFiles
-        .map(stripUnsafeStats(_, bloomUnsafe))
-      val stagedLog = stagePureInsertLog(spark, root, p, fresh,
-        effSchema, partCols, id, changeLogKeys, changeLogRequired,
-        s"append batch $id")
-      commitManifest(spark, root, id, Some(p.id), stagedLog) {
-        // an append is the ideal delta: adds-only, O(batch) rows —
-        // per-micro-batch ingest commits stay O(Δ) at any table size
-        if (deltaEligible(Some(p), partCols, bloomUnsafe.isEmpty))
-          writeManifestDelta(spark, root, id, p, effSchema.toDDL,
-            fresh, Set.empty, commitMapping)
-        else
-          writeManifest(spark, root, id, partCols, effSchema.toDDL,
-            fresh ++ carried, commitMapping)
-      }
-      committed = true
+    // the OLD staged dir's marker is done either way: adopted means
+    // the files now live under batch-<id> (its own marker above);
+    // refused means the stage is abandoned and vacuum should reclaim
+    reuse.filter(_.batchId != id).foreach(s =>
+      fs.delete(retryKeepPath(root, s.batchId), false))
+    adopted.foreach { _ =>
+      // the constraint set may have changed while retrying: re-check
+      // the rows exactly as staged (the batch DF may be
+      // nondeterministic upstream; the files are what commits)
+      if (reuse.exists(_.checks != checks))
+        enforceChecks(readLogical(spark, Seq(batchDir), effSchema,
+          commitMapping._1), checks, s"append retry $id at $root")
+    }
+    val fresh = adopted.getOrElse {
+      if (reuse.exists(_.checks != checks))
+        enforceChecks(batch, checks, s"append $id at $root")
+      writeBatch(batch, batchDir, partCols, sortCols,
+        colMap = commitMapping._1)
+      val effBloomCols =
+        if (bloomCols.nonEmpty) bloomCols
+        else p.files.flatMap(_.blooms.keys).distinct
+          .filter(effSchema.fieldNames.contains)
+      collectEntries(spark, batchDir, id, effSchema,
+        partCols, effBloomCols, colMap = commitMapping._1)
+    }
+    recordStaged(StagedAppendBatch(id, fresh, effSchema.toDDL,
+      commitMapping._1, checks))
+    onStagedForTest()
+    // carried files lose blooms AND min/max stats on string-form-
+    // changing widenings exactly as in commitPartitions (a stale
+    // bloom would false-negative against probes hashed under the
+    // new schema; a stale stat would false-skip the envelope test)
+    val bloomUnsafe = bloomUnsafeCols(p, effSchema)
+    val carried = p.allFiles
+      .map(stripUnsafeStats(_, bloomUnsafe))
+    val stagedLog = stagePureInsertLog(spark, root, p, fresh,
+      effSchema, partCols, id, changeLogKeys, changeLogRequired,
+      s"append batch $id")
+    // an append is the ideal delta: adds-only, O(batch) rows —
+    // per-micro-batch ingest commits stay O(Δ) at any table size
+    CowCommit(partCols, effSchema.toDDL, commitMapping, adds = fresh,
+      carried = carried, statsPreserved = bloomUnsafe.isEmpty,
+      stagedLog = stagedLog,
       // landed: the manifest references the files now, which is the
       // durable protection — the marker has done its job
-      if (protectStage) fs.delete(retryKeepPath(root, id), false)
-      vacuumKnown = Map(
-        id -> (fresh ++ carried).map(_.path),
-        p.id -> p.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    if (committed) vacuum(spark, root, keep, vacuumKnown)
-    committed
+      settle = landed =>
+        if (landed && protectStage) fs.delete(retryKeepPath(root, id), false))
   }
 
   /** APPEND with BOUNDED AUTOMATIC RETRY on lost commit races —
@@ -4905,20 +4883,13 @@ object CowTable {
       var id = prev.map(_.id).getOrElse(0L) + 1L
       while (parked.contains(id) || foreignClaims.contains(id)) id += 1
       try {
-        val ok = prev match {
-          case None =>
-            // first commit: an append to nothing is the initial
-            // snapshot (same rule as commitAppend); a lost race here
-            // staged under commitPartitionsFrom's own machinery and
-            // simply retries against the winner's table
-            commitPartitionsFrom(None, batch, Set.empty, root, id,
-              partCols, keep, sortCols, bloomCols, changeLogKeys)
-          case Some(p) =>
-            commitAppendOnto(batch, root, id, p, partCols, keep,
-              sortCols, bloomCols, changeLogKeys, changeLogRequired,
-              reuse = staged, recordStaged = s => staged = Some(s),
-              protectStage = true, onStagedForTest = onStagedForTest)
-        }
+        // onto an empty table the attempt is the initial snapshot, and
+        // a lost race there simply retries against the winner's table
+        val ok = transact(spark, root, id, keep, prev)(base =>
+          Some(appendCommit(batch, root, id, base, partCols, sortCols,
+            bloomCols, changeLogKeys, changeLogRequired,
+            reuse = staged, recordStaged = s => staged = Some(s),
+            protectStage = true, onStagedForTest = onStagedForTest)))
         if (ok) return id
         // superseded replay guard: the head advanced past our id —
         // nothing of ours was staged this attempt; retry immediately
@@ -5002,70 +4973,37 @@ object CowTable {
     val prev = currentManifest(spark, root)
     require(!prev.exists(_.id >= id),
       s"stage id $id at $root is not ahead of committed ${prev.map(_.id)}")
-    enforceChecks(batch, checkConstraints(spark, root),
-      s"stage $id at $root")
-    val effSchema = effSchemaOf(prev, batch.schema)
-    prev.foreach(p => validateEvolution(p, effSchema, partCols))
-    val commitMapping = mappingForAdds(prev, effSchema)
-    // per-id lease, same as every batch-writing path: an ordinary
-    // writer racing for the SAME id would otherwise interleave its
-    // locked batch-dir write with this unlocked one and commit a
-    // manifest listing a mix of both writers' files
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id))
-        throw new CowConcurrentCommitException(
-          s"stage $id at $root: a commit with id >= $id landed while " +
-            "acquiring the lease — re-stage with a fresh id")
-      // a FRESH `_retrykeep-<id>` marker is an in-flight retry's claim
-      // on batch-<id> (its moved staged data may be parked there
-      // between attempts) — overwriting it would destroy that retry's
-      // only copy (review r18); stale markers are crashed leftovers
-      // vacuum sweeps
-      if (freshRetryKeep(hfs(spark, root), root, id))
-        throw new CowConcurrentCommitException(
-          s"stage $id at $root: an in-flight retry holds this id's " +
-            "batch dir — re-stage with a different id")
-      val batchDir = s"$root/$BatchPrefix$id"
-      writeBatch(batch, batchDir, partCols, sortCols,
-        colMap = commitMapping._1)
-      val effBloomCols =
-        if (bloomCols.nonEmpty) bloomCols
-        else prev.toSeq.flatMap(_.files.flatMap(_.blooms.keys)).distinct
-          .filter(effSchema.fieldNames.contains)
-      val fresh = collectEntries(spark, batchDir, id, effSchema, partCols,
-        effBloomCols, colMap = commitMapping._1)
-      val bloomUnsafe = prev.map(bloomUnsafeCols(_, effSchema))
-        .getOrElse(Set.empty[String])
-      val carried = prev.map(_.allFiles
-          .map(stripUnsafeStats(_, bloomUnsafe)))
-        .getOrElse(Nil)
-      writeManifestAt(spark, stagedManifestDir(root, id), partCols,
-        effSchema.toDDL, fresh ++ carried, commitMapping,
-        bucketOk = bucketOkOf(spark, root, fresh ++ carried))
-      // changelog sidecar, STAGED like everything else: the stage is
-      // append-only, so the same pure-I guard as commitAppend applies
-      // (the publish's based-on verification pins the base unchanged,
-      // so the stage-time probe stays valid). The sidecar lands under
-      // a dot-prefixed staging dir invisible to every consumer until
-      // publishStaged renames it into _changes/<id> — without this, a
-      // WAP-published commit on a sidecar-maintained table was
-      // silently invisible to its streaming MVs.
-      val stagedLog = stagePureInsertLog(spark, root,
-        prev.getOrElse(CowManifest(id, partCols, effSchema.toDDL, Nil)),
-        fresh, effSchema, partCols, id, changeLogKeys, changeLogRequired,
-        s"staged append $id")
-      val fs = hfs(spark, root)
-      val out = fs.create(stagedMetaPath(root, id), true)
+    // the stage is an append that publishes nothing: under the same
+    // per-id lease as every batch-writing path (an ordinary writer
+    // racing for the SAME id would otherwise interleave its batch-dir
+    // write with this one), its build writes the batch, the STAGED
+    // manifest and the meta, and returns None — the id stays open for
+    // publishStaged. The changelog sidecar is staged like everything
+    // else, under a dot-prefixed dir invisible to every consumer until
+    // publishStaged renames it into _changes/<id>; the append's pure-I
+    // guard stays valid because publish's based-on check pins the base.
+    val leased = transact(spark, root, id, keep = 2, prev) { _ =>
+      val c = appendCommit(batch, root, id, prev, partCols, sortCols,
+        bloomCols, changeLogKeys, changeLogRequired)
+      val files = c.carried ++ c.adds
+      writeManifestAt(spark, stagedManifestDir(root, id), c.partCols,
+        c.schemaDdl, files, c.mapping,
+        bucketOk = bucketOkOf(spark, root, files))
+      val out = hfs(spark, root).create(stagedMetaPath(root, id), true)
       // meta v2: base id \n sidecar staging dir name (or -) \n the
       // fingerprint of the CHECK-constraint set validated at stage
       // time (publish re-validates the staged rows when it changed)
       try out.write((prev.map(_.id.toString).getOrElse("none") + "\n" +
-          stagedLog.map(_.getName).getOrElse("-") + "\n" +
+          c.stagedLog.map(_.getName).getOrElse("-") + "\n" +
           checksFingerprint(checkConstraints(spark, root)))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-    } finally releaseCommitLock(spark, root, id)
+      None
+    }
+    if (!leased)
+      throw new CowConcurrentCommitException(
+        s"stage $id at $root: a commit with id >= $id landed while " +
+          "acquiring the lease — re-stage with a fresh id")
   }
 
   /** The WOULD-BE snapshot of staged commit `id` — what the table will
@@ -5154,20 +5092,28 @@ object CowTable {
         s"publish of staged commit $id at $root (constraints changed " +
           "since stage)")
     }
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id))
+    val published = transact(spark, root, id, keep) { base =>
+      // the stage carried its files from `basedOn`, not necessarily from
+      // the head this transaction read: a commit that landed since the
+      // stage fails here exactly as it would fail the verification
+      if (base.map(_.id) != basedOn) {
+        discardChangeLog(spark, root, stagedLog)
         throw new CowConcurrentCommitException(
-          s"staged commit $id at $root: a commit with id >= $id already " +
-            "exists — discard the stage and re-stage with a fresh id")
-      commitManifest(spark, root, id, basedOn, stagedLog) {
-        writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles, mappingOf(Some(m)))
+          s"commit $id at $root: based on snapshot $basedOn but current " +
+            s"is ${base.map(_.id)} — recompute against the new base " +
+            "and retry (nothing was published)")
       }
-    } finally releaseCommitLock(spark, root, id)
-    fs.delete(new Path(stagedManifestDir(root, id)), true)
-    fs.delete(metaP, false)
-    vacuum(spark, root, keep, Map(id -> m.allFiles.map(_.path)))
+      Some(CowCommit(m.partCols, m.schemaDdl, mappingOf(Some(m)),
+        adds = m.allFiles, carried = Nil, statsPreserved = false,
+        stagedLog = stagedLog, settle = landed => if (landed) {
+          fs.delete(new Path(stagedManifestDir(root, id)), true)
+          fs.delete(metaP, false)
+        }))
+    }
+    if (!published)
+      throw new CowConcurrentCommitException(
+        s"staged commit $id at $root: a commit with id >= $id already " +
+          "exists — discard the stage and re-stage with a fresh id")
   }
 
   /** [[publishStaged]] with BOUNDED AUTO-RETRY on a lost race — the
@@ -5291,11 +5237,12 @@ object CowTable {
           var newId = math.max(prev.id, staged.batchId.max(id)) + 1
           while (parked.contains(newId)) newId += 1
           try {
-            val ok = commitAppendOnto(batchNow(prev.schema), root,
-              newId, prev, m.partCols, keep, Nil, stageBloomCols, Nil,
-              changeLogRequired = false,
-              reuse = Some(staged), recordStaged = s => staged = s,
-              protectStage = true, onStagedForTest = onStagedForTest)
+            val ok = transact(spark, root, newId, keep, Some(prev))(base =>
+              Some(appendCommit(batchNow(prev.schema), root, newId, base,
+                m.partCols, Nil, stageBloomCols, Nil,
+                changeLogRequired = false,
+                reuse = Some(staged), recordStaged = s => staged = s,
+                protectStage = true, onStagedForTest = onStagedForTest)))
             if (ok) {
               // the stage is consumed: its manifest + meta sweep; the
               // batch dir lives on under the committed name
@@ -5395,54 +5342,69 @@ object CowTable {
       changeLogKeys: Seq[String] = Nil,
       where: Option[Column] = None): MaintStatus = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    if (committedIds(spark, root).exists(_ >= id)) return MaintSuperseded
-    val m = currentManifest(spark, root).getOrElse(return MaintNoOp)
-    // partition-scoped form (`OPTIMIZE … WHERE p`): compact and fold
-    // delete debt in the matching partitions only
-    val scope = where.map(partitionsMatching(spark, m, _))
-    val tombParts = (m.tombstones ++ m.dvs).map(m.partKeyOf).toSet
-    val wantByPart: Map[String, Long] = m.files.groupBy(m.partKeyOf)
-      .flatMap { case (pk, fs) =>
-        val bytes = fs.map(_.bytes).sum
-        val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-        if ((fs.size > want || tombParts.contains(pk)) &&
-            scope.forall(_.contains(pk))) Some(pk -> want)
-        else None
-      }
-    if (wantByPart.isEmpty) return MaintNoOp
-    val touched = wantByPart.keySet
-    val rewrite = resolved(spark, root, m,
-      m.files.filter(f => touched.contains(m.partKeyOf(f))))
-    // per-partition bin counts ride in on a tiny broadcast table keyed
-    // by the partition values' Spark string forms (the same cast that
-    // stamps manifest entries); null-safe join so NULL partitions bin
-    val salted =
-      if (m.partCols.isEmpty) {
-        val want = wantByPart.values.head
-        rewrite.withColumn("__cw_bin", pmod(binHash(rewrite), lit(want)))
-      } else {
-        import spark.implicits._
-        val wantRows = wantByPart.toSeq.map { case (pk, want) =>
-          val part = m.files.find(f => m.partKeyOf(f) == pk).get.part
-          (m.partCols.map(c => part.getOrElse(c, null)), want)
+    maintain(spark, root, id, keep) { m =>
+      // partition-scoped form (`OPTIMIZE … WHERE p`): compact and fold
+      // delete debt in the matching partitions only
+      val scope = where.map(partitionsMatching(spark, m, _))
+      val tombParts = (m.tombstones ++ m.dvs).map(m.partKeyOf).toSet
+      val wantByPart: Map[String, Long] = m.files.groupBy(m.partKeyOf)
+        .flatMap { case (pk, fs) =>
+          val bytes = fs.map(_.bytes).sum
+          val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
+          if ((fs.size > want || tombParts.contains(pk)) &&
+              scope.forall(_.contains(pk))) Some(pk -> want)
+          else None
         }
-        val wantDf = wantRows.toDF("__cw_vals", "__cw_want").select(
-          m.partCols.zipWithIndex.map { case (c, i) =>
-            col("__cw_vals").getItem(i).as(s"__cw_$c")
-          } :+ col("__cw_want"): _*)
-        val cond = m.partCols.map(c =>
-          col(c).cast("string") <=> col(s"__cw_$c")).reduce(_ && _)
-        rewrite.join(broadcast(wantDf), cond)
-          .withColumn("__cw_bin", pmod(binHash(rewrite), col("__cw_want")))
-          .drop(m.partCols.map(c => s"__cw_$c") :+ "__cw_want": _*)
+      if (wantByPart.isEmpty) None
+      else {
+        val touched = wantByPart.keySet
+        val rewrite = resolved(spark, root, m,
+          m.files.filter(f => touched.contains(m.partKeyOf(f))))
+        // per-partition bin counts ride in on a tiny broadcast table keyed
+        // by the partition values' Spark string forms (the same cast that
+        // stamps manifest entries); null-safe join so NULL partitions bin
+        val salted =
+          if (m.partCols.isEmpty) {
+            val want = wantByPart.values.head
+            rewrite.withColumn("__cw_bin", pmod(binHash(rewrite), lit(want)))
+          } else {
+            import spark.implicits._
+            val wantRows = wantByPart.toSeq.map { case (pk, want) =>
+              val part = m.files.find(f => m.partKeyOf(f) == pk).get.part
+              (m.partCols.map(c => part.getOrElse(c, null)), want)
+            }
+            val wantDf = wantRows.toDF("__cw_vals", "__cw_want").select(
+              m.partCols.zipWithIndex.map { case (c, i) =>
+                col("__cw_vals").getItem(i).as(s"__cw_$c")
+              } :+ col("__cw_want"): _*)
+            val cond = m.partCols.map(c =>
+              col(c).cast("string") <=> col(s"__cw_$c")).reduce(_ && _)
+            rewrite.join(broadcast(wantDf), cond)
+              .withColumn("__cw_bin", pmod(binHash(rewrite), col("__cw_want")))
+              .drop(m.partCols.map(c => s"__cw_$c") :+ "__cw_want": _*)
+          }
+        val totalBins = math.min(wantByPart.values.sum, 1L << 20).toInt
+        Some(rewriteCommit(Some(m), salted, touched, root, id, m.partCols,
+          changeLogKeys = changeLogKeys, split = Some(("__cw_bin", totalBins))))
       }
-    val totalBins = math.min(wantByPart.values.sum, 1L << 20).toInt
-    // ownership rides through (see optimizeZorder): false = lost race
-    if (commitPartitionsFrom(Some(m), salted, touched, root, id,
-        m.partCols, keep, changeLogKeys = changeLogKeys,
-        split = Some(("__cw_bin", totalBins))))
-      MaintCommitted
-    else MaintSuperseded
+    }
+  }
+
+  /** [[transact]] for maintenance commits, with the exit it took: an
+    * empty table or a None build is [[MaintNoOp]] (id unconsumed), a
+    * superseded id [[MaintSuperseded]]. Reporting a lost race as
+    * success would hide a skipped optimize behind a "done" — the
+    * silent-supersede hole the ownership contract exists to close.
+    */
+  private def maintain(spark: SparkSession, root: String, id: Long,
+      keep: Int)(build: CowManifest => Option[CowCommit]): MaintStatus = {
+    var noOp = false
+    val won = transact(spark, root, id, keep) { base =>
+      val c = base.flatMap(build)
+      noOp = c.isEmpty
+      c
+    }
+    if (!won) MaintSuperseded else if (noOp) MaintNoOp else MaintCommitted
   }
 
   /** Deterministic row hash for compaction binning: every hashable
@@ -5462,13 +5424,13 @@ object CowTable {
       df: DataFrame, root: String, id: Long, partCols: Seq[String],
       keep: Int = 2, sortCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
-      changeLogKeys: Seq[String] = Nil): Boolean = {
-    val base = currentManifest(df.sparkSession, root)
-    val allTouched = base
-      .map(p => p.allFiles.map(p.partKeyOf).toSet).getOrElse(Set.empty)
-    commitPartitionsFrom(base, df, allTouched, root, id, partCols, keep,
-      sortCols, bloomCols, changeLogKeys, relayout = true)
-  }
+      changeLogKeys: Seq[String] = Nil): Boolean =
+    transact(df.sparkSession, root, id, keep) { base =>
+      val allTouched = base
+        .map(p => p.allFiles.map(p.partKeyOf).toSet).getOrElse(Set.empty)
+      Some(rewriteCommit(base, df, allTouched, root, id, partCols,
+        sortCols, bloomCols, changeLogKeys, relayout = true))
+    }
 
   /** PARTITION LAYOUT EVOLUTION as one COW commit: the current content
     * rewritten under `newPartCols` at the SAME root — history, time
@@ -5544,22 +5506,21 @@ object CowTable {
       versionCol: Option[String] = None,
       keep: Int = 2,
       sortCols: Seq[String] = Nil,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val touched = touchedKeys(delta, partCols)
-    val outCols = delta.columns.toSeq.filterNot(versionCol.contains)
-    val base = currentManifest(spark, root)
-    val merged = base match {
-      case None =>
-        Merge.upsert(delta.select(outCols.map(col): _*).limit(0), delta,
-          keyCols, versionCol)
-      case Some(m) =>
-        Merge.upsert(baseFor(spark, root, m, touched), delta,
-          keyCols, versionCol)
+      changeLog: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val touched = touchedKeys(delta, partCols)
+      val outCols = delta.columns.toSeq.filterNot(versionCol.contains)
+      val merged = base match {
+        case None =>
+          Merge.upsert(delta.select(outCols.map(col): _*).limit(0), delta,
+            keyCols, versionCol)
+        case Some(m) =>
+          Merge.upsert(baseFor(spark, root, m, touched), delta,
+            keyCols, versionCol)
+      }
+      Some(rewriteCommit(base, merged, touched, root, id, partCols,
+        sortCols, changeLogKeys = if (changeLog) keyCols else Nil))
     }
-    commitPartitionsFrom(base, merged, touched, root, id, partCols, keep,
-      sortCols, changeLogKeys = if (changeLog) keyCols else Nil)
-  }
 
   /** PREDICATE DELETE as a COW commit (Delta's `DELETE FROM t WHERE`):
     * rewrite exactly the partitions that hold matching rows, dropping
@@ -5607,31 +5568,43 @@ object CowTable {
       prune: Seq[CowRange] = Nil,
       keep: Int = 2,
       sortCols: Seq[String] = Nil,
-      changeLogKeys: Seq[String] = Nil): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
+      changeLogKeys: Seq[String] = Nil): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      val hit = partitionsHit(spark, root, m, condOf, prune)
+      if (hit.isEmpty) None // nothing matched — id unconsumed
+      else {
+        val baseScan = resolved(spark, root, m,
+          m.files.filter(f => hit.contains(m.partKeyOf(f))))
+        val rewrite =
+          baseScan.where(!coalesce(condOf(baseScan), lit(false)))
+        Some(rewriteCommit(base, rewrite, hit, root, id, m.partCols,
+          sortCols, changeLogKeys = changeLogKeys))
+      }
+    }
+
+  /** Keys of the partitions of `m` holding rows that match `condOf` —
+    * a scan of the `prune`-kept candidates only; values cast to string
+    * IN-ENGINE so they match the manifest's own cast-to-string
+    * partition representation exactly. Empty when nothing can match.
+    */
+  private def partitionsHit(
+      spark: SparkSession, root: String, m: CowManifest,
+      condOf: DataFrame => Column, prune: Seq[CowRange]): Set[String] = {
     val candidates =
       if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-    if (candidates.isEmpty) return true // nothing can match — id unconsumed
-    // partitions that actually hold matching rows (candidate-scan only;
-    // values cast to string IN-ENGINE so they match the manifest's own
-    // cast-to-string partition representation exactly)
-    val candScan = resolved(spark, root, m, candidates, prune)
-    val hit = candScan
-      .where(condOf(candScan))
-      .select(m.partCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => partKey(m.partCols,
-        m.partCols.zipWithIndex.map { case (c, i) =>
-          c -> (if (r.isNullAt(i)) null else r.getString(i)) }.toMap))
-      .toSet
-    if (hit.isEmpty) return true
-    val baseScan = resolved(spark, root, m,
-      m.files.filter(f => hit.contains(m.partKeyOf(f))))
-    val rewrite = baseScan.where(!coalesce(condOf(baseScan), lit(false)))
-    commitPartitionsFrom(Some(m), rewrite, hit, root, id, m.partCols,
-      keep, sortCols, changeLogKeys = changeLogKeys)
+    if (candidates.isEmpty) Set.empty
+    else {
+      val candScan = resolved(spark, root, m, candidates, prune)
+      candScan
+        .where(condOf(candScan))
+        .select(m.partCols.map(c => col(c).cast("string")): _*)
+        .distinct().collect()
+        .map(r => partKey(m.partCols,
+          m.partCols.zipWithIndex.map { case (c, i) =>
+            c -> (if (r.isNullAt(i)) null else r.getString(i)) }.toMap))
+        .toSet
+    }
   }
 
   /** SET assignments made SAFE against the table schema — two layers,
@@ -5742,69 +5715,88 @@ object CowTable {
       keep: Int = 2,
       sortCols: Seq[String] = Nil,
       changeLogKeys: Seq[String] = Nil,
-      setsSubquery: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    // key validation binds against an empty probe (bound SET values
-    // resolve by name against any frame carrying the table schema)
-    val setKeys = setOf(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], m.schema)).keySet
-    require(setKeys.nonEmpty, "UPDATE needs at least one SET assignment")
-    setKeys.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"SET column '$c' is not a table column"))
-    m.partCols.foreach(p => require(!setKeys.contains(p),
-      s"UPDATE SET must not assign partition column '$p'"))
-    val candidates =
-      if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-    if (candidates.isEmpty) return true // nothing can match — id unconsumed
-    val candScan = resolved(spark, root, m, candidates, prune)
-    val hit = candScan
-      .where(condOf(candScan))
-      .select(m.partCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => partKey(m.partCols,
-        m.partCols.zipWithIndex.map { case (c, i) =>
-          c -> (if (r.isNullAt(i)) null else r.getString(i)) }.toMap))
-      .toSet
-    if (hit.isEmpty) return true
-    // guarded casts: mistyped assignments fail loud (statically or with
-    // the offending value), never as silent NULLs — see
-    // [[checkedAssignments]]. The guard sits INSIDE when(applies, …),
-    // so it only ever evaluates on matched rows.
-    val baseScan = resolved(spark, root, m,
-      m.files.filter(f => hit.contains(m.partKeyOf(f))))
-    val setChecked = checkedAssignments(baseScan, m, setOf(baseScan))
-    val applies = coalesce(condOf(baseScan), lit(false))
-    val rewrite =
-      if (!setsSubquery)
-        baseScan.select(m.schema.fields.toSeq.map { f =>
-          setChecked.get(f.name) match {
-            case Some(v) =>
-              when(applies, v).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
+      setsSubquery: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      // key validation binds against an empty probe (bound SET values
+      // resolve by name against any frame carrying the table schema)
+      val setKeys = setOf(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], m.schema)).keySet
+      require(setKeys.nonEmpty, "UPDATE needs at least one SET assignment")
+      setKeys.foreach(c => require(m.schema.fieldNames.contains(c),
+        s"SET column '$c' is not a table column"))
+      m.partCols.foreach(p => require(!setKeys.contains(p),
+        s"UPDATE SET must not assign partition column '$p'"))
+      val hit = partitionsHit(spark, root, m, condOf, prune)
+      if (hit.isEmpty) None // nothing matched — id unconsumed
       else {
-        // ANSI: SET evaluates on MATCHED rows only. A subquery-bearing
-        // value plans as a JOIN that — inside when(applies, …) — would
-        // still run for every row of the hit partitions, so a
-        // correlated scalar subquery that is multi-row only for an
-        // UNMATCHED row would spuriously abort the statement (and the
-        // DV twin, which computes new images from the cond-filtered
-        // matches, would diverge). Split matched/untouched instead:
-        // two passes over exactly the touched partitions, only when
-        // subqueries ride in the SET.
-        val updated = baseScan.where(applies)
-          .select(m.schema.fields.toSeq.map(f =>
-            setChecked.get(f.name).map(_.as(f.name))
-              .getOrElse(col(f.name))): _*)
-        baseScan.where(!applies)
-          .select(m.schema.fieldNames.toSeq.map(col): _*)
-          .unionByName(updated)
+        // guarded casts: mistyped assignments fail loud (statically or with
+        // the offending value), never as silent NULLs — see
+        // [[checkedAssignments]]. The guard sits INSIDE when(applies, …),
+        // so it only ever evaluates on matched rows.
+        val baseScan = resolved(spark, root, m,
+          m.files.filter(f => hit.contains(m.partKeyOf(f))))
+        val setChecked = checkedAssignments(baseScan, m, setOf(baseScan))
+        val applies = coalesce(condOf(baseScan), lit(false))
+        val rewrite =
+          if (!setsSubquery)
+            baseScan.select(m.schema.fields.toSeq.map { f =>
+              setChecked.get(f.name) match {
+                case Some(v) =>
+                  when(applies, v).otherwise(col(f.name)).as(f.name)
+                case None => col(f.name)
+              }
+            }: _*)
+          else {
+            // ANSI: SET evaluates on MATCHED rows only. A subquery-bearing
+            // value plans as a JOIN that — inside when(applies, …) — would
+            // still run for every row of the hit partitions, so a
+            // correlated scalar subquery that is multi-row only for an
+            // UNMATCHED row would spuriously abort the statement (and the
+            // DV twin, which computes new images from the cond-filtered
+            // matches, would diverge). Split matched/untouched instead:
+            // two passes over exactly the touched partitions, only when
+            // subqueries ride in the SET.
+            val updated = baseScan.where(applies)
+              .select(m.schema.fields.toSeq.map(f =>
+                setChecked.get(f.name).map(_.as(f.name))
+                  .getOrElse(col(f.name))): _*)
+            baseScan.where(!applies)
+              .select(m.schema.fieldNames.toSeq.map(col): _*)
+              .unionByName(updated)
+          }
+        Some(rewriteCommit(base, rewrite, hit, root, id, m.partCols,
+          sortCols, changeLogKeys = changeLogKeys))
       }
-    commitPartitionsFrom(Some(m), rewrite, hit, root, id, m.partCols,
-      keep, sortCols, changeLogKeys = changeLogKeys)
+    }
+
+  /** Would an OUTSTANDING full-row tombstone of `m` null-safe-equal a
+    * row of `newImages` (on the tombstone's own column set)? Such a
+    * tombstone would anti-join the fresh append away, so the MOR/DV
+    * updates fall back to the COW rewrite — one delta-sized INTERSECT
+    * per tombstone schema group.
+    */
+  private def tombCollides(spark: SparkSession, root: String,
+      m: CowManifest, newImages: DataFrame): Boolean =
+    m.tombstones.nonEmpty &&
+      tombstoneGroups(spark, root, m.tombstones, m.colMap).exists {
+        case (cols, t) =>
+          !newImages.select(cols.map(col): _*).intersect(t).isEmpty
+      }
+
+  /** The bloom columns an appended MOR/DV batch inherits from `m`. */
+  private def inheritedBlooms(m: CowManifest): Seq[String] =
+    m.files.flatMap(_.blooms.keys).distinct
+      .filter(m.schema.fieldNames.contains)
+
+  /** The rows of `files` this commit just wrote (data or tombstone
+    * entries), read back as data under `m`'s schema and mapping.
+    */
+  private def writtenRows(spark: SparkSession, root: String,
+      m: CowManifest, id: Long, files: Seq[CowFile]): DataFrame = {
+    val stub = CowManifest(id, m.partCols, m.schemaDdl,
+      files.map(_.copy(kind = KindData)), m.colMap, m.retiredPhys)
+    dfFor(spark, root, stub, stub.files)
   }
 
   /** PREDICATE UPDATE as MERGE-ON-READ — deletion-vector economics
@@ -5841,132 +5833,98 @@ object CowTable {
       prune: Seq[CowRange] = Nil,
       keep: Int = 2,
       changeLogKeys: Seq[String] = Nil): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    set.keys.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"SET column '$c' is not a table column"))
-    m.partCols.foreach(p => require(!set.contains(p),
-      s"UPDATE SET must not assign partition column '$p'"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var lockHeld = false
-    acquireCommitLock(spark, root, id)
-    lockHeld = true
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    var collided = false
+    val ok = transact(spark, root, id, keep) { base =>
+      require(set.nonEmpty, "UPDATE needs at least one SET assignment")
+      val m = headOf(base, root)
+      set.keys.foreach(c => require(m.schema.fieldNames.contains(c),
+        s"SET column '$c' is not a table column"))
+      m.partCols.foreach(p => require(!set.contains(p),
+        s"UPDATE SET must not assign partition column '$p'"))
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true
-      val fields = m.schema.fields.toSeq
-      val candScan = resolved(spark, root, m, candidates, prune)
-      // same loud-failure guard as the COW twin (see checkedAssignments)
-      // — evaluated only on matched rows (`matches` below is already
-      // cond-filtered before any new image is computed)
-      val setChecked = checkedAssignments(candScan, m, set)
-      def newImage(df: DataFrame): DataFrame =
-        df.select(fields.map { f =>
-          setChecked.get(f.name) match {
-            case Some(v) => v.as(f.name)
-            case None => col(f.name)
-          }
+      if (candidates.isEmpty) None
+      else {
+        val fields = m.schema.fields.toSeq
+        val candScan = resolved(spark, root, m, candidates, prune)
+        // same loud-failure guard as the COW twin (see
+        // checkedAssignments) — evaluated only on matched rows
+        // (`matches` below is already cond-filtered before any new
+        // image is computed)
+        val setChecked = checkedAssignments(candScan, m, set)
+        val matches = candScan.where(coalesce(cond, lit(false)))
+        val oldStruct = struct(fields.map(f => col(f.name)): _*)
+        // pinned once: the candidates scan + anti-join feeds the
+        // collision probes AND both writes below — recomputing a
+        // delta-sized set four times would quadruple the scan, and
+        // pinning also means `cond`/`set` evaluate exactly once (both
+        // must still be deterministic — the tombstone and its append
+        // derive from the same materialized rows either way)
+        val changed = matches
+          .where(!(oldStruct <=> struct(fields.map { f =>
+            setChecked.get(f.name).getOrElse(col(f.name)).as(f.name)
+          }: _*)))
+          .localCheckpoint()
+        // exactness guard (see scaladoc): any new image colliding with
+        // a different matched row's old image forces the COW path.
+        // INTERSECT compares whole rows null-safely and positionally,
+        // so it cannot trip over the self-join attribute reuse an
+        // explicit condition would (unset columns keep their
+        // expression ids). Same-row pairs can't collide: changed rows
+        // have new != old.
+        val ni = changed.select(fields.map { f =>
+          setChecked.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
         }: _*)
-      val matches = candScan.where(coalesce(cond, lit(false)))
-      val oldStruct = struct(fields.map(f => col(f.name)): _*)
-      // pinned once: the candidates scan + anti-join feeds the
-      // collision probes AND both writes below — recomputing a
-      // delta-sized set four times would quadruple the scan, and
-      // pinning also means `cond`/`set` evaluate exactly once (both
-      // must still be deterministic — the tombstone and its append
-      // derive from the same materialized rows either way)
-      val changed = matches
-        .where(!(oldStruct <=> struct(fields.map { f =>
-          setChecked.get(f.name).getOrElse(col(f.name)).as(f.name)
-        }: _*)))
-        .localCheckpoint()
-      // exactness guard (see scaladoc): any new image colliding with a
-      // different matched row's old image forces the COW path.
-      // INTERSECT compares whole rows null-safely and positionally, so
-      // it cannot trip over the self-join attribute reuse an explicit
-      // condition would (unset columns keep their expression ids).
-      // Same-row pairs can't collide: changed rows have new != old.
-      val ni = newImage(changed)
-      val collides = !ni.intersect(changed).isEmpty
-      // ...and the same hazard CROSS-COMMIT: an OUTSTANDING tombstone
-      // from a prior MOR delete/update that null-safe-equals a new
-      // image (on the tombstone's own column set) would anti-join the
-      // fresh append away — probe per tombstone schema group, same
-      // delta-sized INTERSECT. The COW fallback is sound for both:
-      // rewriting the touched partitions folds their tombstones, and
-      // new images can only land in touched partitions (SET cannot
-      // assign partition columns).
-      def tombCollides = m.tombstones.nonEmpty &&
-        tombstoneGroups(spark, root, m.tombstones, m.colMap).exists {
-          case (cols, t) =>
-            !ni.select(cols.map(col): _*).intersect(t).isEmpty
-        }
-      if (collides || tombCollides) {
-        releaseCommitLock(spark, root, id)
-        lockHeld = false // the finally must not delete a lease a
-                         // concurrent same-id writer may re-acquire
-        return updateWhere(spark, root, id, cond, set, prune, keep,
-          changeLogKeys = changeLogKeys)
-      }
-      // CHECK constraints bind the NEW images exactly as they bind the
-      // COW twin's rewritten rows (commitPartitionsFrom enforces there)
-      // — without this the MOR path would commit an UPDATE the
-      // identical COW UPDATE rejects, breaking both table safety and
-      // the pinned MOR≡COW property. Delta-sized pass over the pinned
-      // `changed` set; the old images need no re-check (they passed
-      // when written and are being REMOVED).
-      enforceChecks(ni, checkConstraints(spark, root),
-        s"MOR update $id at $root")
-      val batchDir = s"$root/$BatchPrefix$id"
-      val tombDir = s"$batchDir/__tomb"
-      writeBatch(ni, batchDir, m.partCols, Nil, colMap = m.colMap)
-      writeBatch(changed, tombDir, m.partCols, Nil, colMap = m.colMap)
-      val effBloomCols = m.files.flatMap(_.blooms.keys).distinct
-        .filter(m.schema.fieldNames.contains)
-      val freshData = collectEntries(spark, batchDir, id, m.schema,
-        m.partCols, effBloomCols, colMap = m.colMap)
-      val freshTombs = collectEntries(spark, tombDir, id, m.schema,
-        m.partCols, colMap = m.colMap)
-        .map(_.copy(kind = KindTombstone))
-      if (freshData.isEmpty && freshTombs.isEmpty) {
-        hfs(spark, root).delete(new Path(batchDir), true)
-        return true // nothing changed — id unconsumed
-      }
-      val stagedLog =
-        if (changeLogKeys.isEmpty) None
+        // ...and the same hazard CROSS-COMMIT: an OUTSTANDING tombstone
+        // from a prior MOR delete/update that null-safe-equals a new
+        // image (on the tombstone's own column set) would anti-join the
+        // fresh append away — probe per tombstone schema group, same
+        // delta-sized INTERSECT. The COW fallback is sound for both:
+        // rewriting the touched partitions folds their tombstones, and
+        // new images can only land in touched partitions (SET cannot
+        // assign partition columns).
+        collided = !ni.intersect(changed).isEmpty ||
+          tombCollides(spark, root, m, ni)
+        if (collided) None
         else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          val dStub = CowManifest(id, m.partCols, m.schemaDdl,
-            freshTombs.map(_.copy(kind = KindData)),
-            m.colMap, m.retiredPhys)
-          val iStub = CowManifest(id, m.partCols, m.schemaDdl,
-            freshData, m.colMap, m.retiredPhys)
-          dfFor(spark, root, dStub, dStub.files)
-            .withColumn(ChangeOper, lit("D"))
-            .unionByName(dfFor(spark, root, iStub, iStub.files)
-              .withColumn(ChangeOper, lit("I")))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
+          // CHECK constraints bind the NEW images exactly as they bind
+          // the COW twin's rewritten rows — without this the MOR path
+          // would commit an UPDATE the identical COW UPDATE rejects,
+          // breaking both table safety and the pinned MOR≡COW property.
+          // Delta-sized pass over the pinned `changed` set; the old
+          // images need no re-check (they passed when written and are
+          // being REMOVED).
+          enforceChecks(ni, checkConstraints(spark, root),
+            s"MOR update $id at $root")
+          val batchDir = s"$root/$BatchPrefix$id"
+          val tombDir = s"$batchDir/__tomb"
+          writeBatch(ni, batchDir, m.partCols, Nil, colMap = m.colMap)
+          writeBatch(changed, tombDir, m.partCols, Nil, colMap = m.colMap)
+          val freshData = collectEntries(spark, batchDir, id, m.schema,
+            m.partCols, inheritedBlooms(m), colMap = m.colMap)
+          val freshTombs = collectEntries(spark, tombDir, id, m.schema,
+            m.partCols, colMap = m.colMap)
+            .map(_.copy(kind = KindTombstone))
+          if (freshData.isEmpty && freshTombs.isEmpty) {
+            hfs(spark, root).delete(new Path(batchDir), true)
+            None // nothing changed — id unconsumed
+          } else {
+            val stagedLog =
+              if (changeLogKeys.isEmpty) None
+              else Some(stageChangeRows(spark, root, id, m,
+                writtenRows(spark, root, m, id, freshTombs) -> "D",
+                writtenRows(spark, root, m, id, freshData) -> "I"))
+            Some(addingTo(m, freshTombs ++ freshData, stagedLog))
+          }
         }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            freshTombs ++ freshData, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ freshTombs ++ freshData, mappingOf(Some(m)))
       }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ freshTombs ++ freshData).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally if (lockHeld) releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+    }
+    // the COW fallback takes its own lease on the same id, so it runs
+    // once this transaction has released it
+    if (collided)
+      updateWhere(spark, root, id, cond, set, prune, keep,
+        changeLogKeys = changeLogKeys)
+    else ok
   }
 
   /** PREDICATE UPDATE with POSITIONAL deletion vectors — the update
@@ -6029,100 +5987,68 @@ object CowTable {
       keep: Int = 2,
       changeLogKeys: Seq[String] = Nil,
       setsSubquery: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val setKeys = setOf(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], m.schema)).keySet
-    require(setKeys.nonEmpty, "UPDATE needs at least one SET assignment")
-    setKeys.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"SET column '$c' is not a table column"))
-    m.partCols.foreach(p => require(!setKeys.contains(p),
-      s"UPDATE SET must not assign partition column '$p'"))
-    Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
-      s"DV update: partition column '$c' collides with the deletion-" +
-        "vector sidecar schema — use updateWhereMor for this table"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    var lockHeld = false
-    acquireCommitLock(spark, root, id)
-    lockHeld = true
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+    var collided = false
+    val ok = transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      val setKeys = setOf(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], m.schema)).keySet
+      require(setKeys.nonEmpty, "UPDATE needs at least one SET assignment")
+      setKeys.foreach(c => require(m.schema.fieldNames.contains(c),
+        s"SET column '$c' is not a table column"))
+      m.partCols.foreach(p => require(!setKeys.contains(p),
+        s"UPDATE SET must not assign partition column '$p'"))
+      requireDvPartCols(m, "update", "updateWhereMor")
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true
-      val fields = m.schema.fields.toSeq
-      val visible = visibleWithPos(spark, root, m, candidates, prune)
-      val setChecked = checkedAssignments(visible, m, setOf(visible))
-      val matches = visible.where(coalesce(condOf(visible), lit(false)))
-      val oldStruct = struct(fields.map(f => col(f.name)): _*)
-      // pinned once: feeds the legacy-tombstone probe, the new-image
-      // write, the DV sidecar, and the changelog D rows
-      val changed = matches
-        .where(!(oldStruct <=> struct(fields.map { f =>
-          setChecked.get(f.name).getOrElse(col(f.name)).as(f.name)
-        }: _*)))
-        .localCheckpoint()
-      val ni = changed.select(fields.map { f =>
-        setChecked.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
-      }: _*)
-      // inherited-state hazard ONLY (see scaladoc): a legacy full-row
-      // tombstone equal to a fresh new image would anti-join it away
-      def tombCollides = m.tombstones.nonEmpty &&
-        tombstoneGroups(spark, root, m.tombstones, m.colMap).exists {
-          case (cols, t) =>
-            !ni.select(cols.map(col): _*).intersect(t).isEmpty
-        }
-      if (tombCollides) {
-        releaseCommitLock(spark, root, id)
-        lockHeld = false // a concurrent same-id writer may re-acquire
-        return updateWhereBy(spark, root, id, condOf, setOf, prune, keep,
-          changeLogKeys = changeLogKeys, setsSubquery = setsSubquery)
-      }
-      // same enforcement as the COW twin and updateWhereMor
-      enforceChecks(ni, checkConstraints(spark, root),
-        s"DV update $id at $root")
-      val batchDir = s"$root/$BatchPrefix$id"
-      writeBatch(ni, batchDir, m.partCols, Nil, colMap = m.colMap)
-      val freshDv = writeDvSidecar(spark, root, m, id, changed)
-      val effBloomCols = m.files.flatMap(_.blooms.keys).distinct
-        .filter(m.schema.fieldNames.contains)
-      val freshData = collectEntries(spark, batchDir, id, m.schema,
-        m.partCols, effBloomCols, colMap = m.colMap)
-      if (freshData.isEmpty && freshDv.isEmpty) {
-        hfs(spark, root).delete(new Path(batchDir), true)
-        return true // nothing changed — id unconsumed
-      }
-      val stagedLog =
-        if (changeLogKeys.isEmpty) None
+      if (candidates.isEmpty) None
+      else {
+        val fields = m.schema.fields.toSeq
+        val visible = visibleWithPos(spark, root, m, candidates, prune)
+        val setChecked = checkedAssignments(visible, m, setOf(visible))
+        val matches = visible.where(coalesce(condOf(visible), lit(false)))
+        val oldStruct = struct(fields.map(f => col(f.name)): _*)
+        // pinned once: feeds the legacy-tombstone probe, the new-image
+        // write, the DV sidecar, and the changelog D rows
+        val changed = matches
+          .where(!(oldStruct <=> struct(fields.map { f =>
+            setChecked.get(f.name).getOrElse(col(f.name)).as(f.name)
+          }: _*)))
+          .localCheckpoint()
+        val ni = changed.select(fields.map { f =>
+          setChecked.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
+        }: _*)
+        // inherited-state hazard ONLY (see scaladoc): a legacy full-row
+        // tombstone equal to a fresh new image would anti-join it away
+        collided = tombCollides(spark, root, m, ni)
+        if (collided) None
         else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          val iStub = CowManifest(id, m.partCols, m.schemaDdl,
-            freshData, m.colMap, m.retiredPhys)
-          changed
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .unionByName(dfFor(spark, root, iStub, iStub.files)
-              .withColumn(ChangeOper, lit("I"))
-              .select((m.schema.fieldNames.toSeq :+ ChangeOper)
-                .map(col): _*))
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
+          // same enforcement as the COW twin and updateWhereMor
+          enforceChecks(ni, checkConstraints(spark, root),
+            s"DV update $id at $root")
+          val batchDir = s"$root/$BatchPrefix$id"
+          writeBatch(ni, batchDir, m.partCols, Nil, colMap = m.colMap)
+          val freshDv = writeDvSidecar(spark, root, m, id, changed)
+          val freshData = collectEntries(spark, batchDir, id, m.schema,
+            m.partCols, inheritedBlooms(m), colMap = m.colMap)
+          if (freshData.isEmpty && freshDv.isEmpty) {
+            hfs(spark, root).delete(new Path(batchDir), true)
+            None // nothing changed — id unconsumed
+          } else {
+            val stagedLog =
+              if (changeLogKeys.isEmpty) None
+              else Some(stageChangeRows(spark, root, id, m, changed -> "D",
+                writtenRows(spark, root, m, id, freshData) -> "I"))
+            Some(addingTo(m, freshDv ++ freshData, stagedLog))
+          }
         }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            freshDv ++ freshData, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ freshDv ++ freshData, mappingOf(Some(m)))
       }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ freshDv ++ freshData).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally if (lockHeld) releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+    }
+    // the COW fallback takes its own lease on the same id, so it runs
+    // once this transaction has released it
+    if (collided)
+      updateWhereBy(spark, root, id, condOf, setOf, prune, keep,
+        changeLogKeys = changeLogKeys, setsSubquery = setsSubquery)
+    else ok
   }
 
   /** COPY-ON-WRITE multi-clause MERGE: [[graft.operators.MergeInto]]
@@ -6155,7 +6081,6 @@ object CowTable {
       boundConds: Seq[Option[DataFrame => Column]] = Nil,
       boundSets: Seq[Map[String, DataFrame => Column]] = Nil): Boolean = {
     import graft.operators.{NotMatchedBySourceDelete, NotMatchedBySourceUpdate}
-    if (committedIds(spark, root).exists(_ >= id)) return false
     val sets = clauses.collect {
       case u: graft.operators.MatchedUpdate => u.set.keySet
       case u: NotMatchedBySourceUpdate => u.set.keySet
@@ -6187,20 +6112,22 @@ object CowTable {
       case _: NotMatchedBySourceUpdate | _: NotMatchedBySourceDelete => true
       case _ => false
     }
-    val base = currentManifest(spark, root)
-    val (target, touched) = base match {
-      case None => (source.limit(0), touchedKeys(source, partCols))
-      case Some(m) if hasBySource =>
-        (resolved(spark, root, m, m.files),
-          m.allFiles.map(m.partKeyOf).toSet ++ touchedKeys(source, partCols))
-      case Some(m) =>
-        val t = touchedKeys(source, partCols)
-        (baseFor(spark, root, m, t), t)
+    transact(spark, root, id, keep) { base =>
+      val (target, touched) = base match {
+        case None => (source.limit(0), touchedKeys(source, partCols))
+        case Some(m) if hasBySource =>
+          (resolved(spark, root, m, m.files),
+            m.allFiles.map(m.partKeyOf).toSet ++
+              touchedKeys(source, partCols))
+        case Some(m) =>
+          val t = touchedKeys(source, partCols)
+          (baseFor(spark, root, m, t), t)
+      }
+      val merged = graft.operators.MergeInto(target, source, keyCols,
+        clauses, boundConds = boundConds, boundSets = boundSets)
+      Some(rewriteCommit(base, merged, touched, root, id, partCols,
+        sortCols, changeLogKeys = changeLogKeys))
     }
-    val merged = graft.operators.MergeInto(target, source, keyCols,
-      clauses, boundConds = boundConds, boundSets = boundSets)
-    commitPartitionsFrom(base, merged, touched, root, id, partCols, keep,
-      sortCols, changeLogKeys = changeLogKeys)
   }
 
   /** COPY-ON-WRITE CDC apply: [[Cdc.apply]] (I/U/D, newest-wins) over
@@ -6219,20 +6146,19 @@ object CowTable {
       versionCol: Option[String] = None,
       keep: Int = 2,
       sortCols: Seq[String] = Nil,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val touched = touchedKeys(batch, partCols)
-    val outCols = batch.columns.toSeq
-      .filterNot(c => c == operCol || versionCol.contains(c))
-    val baseM = currentManifest(spark, root)
-    val base = baseM match {
-      case None => batch.select(outCols.map(col): _*).limit(0)
-      case Some(m) => baseFor(spark, root, m, touched)
+      changeLog: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val touched = touchedKeys(batch, partCols)
+      val outCols = batch.columns.toSeq
+        .filterNot(c => c == operCol || versionCol.contains(c))
+      val before = base match {
+        case None => batch.select(outCols.map(col): _*).limit(0)
+        case Some(m) => baseFor(spark, root, m, touched)
+      }
+      val merged = Cdc.apply(before, batch, keyCols, operCol, versionCol)
+      Some(rewriteCommit(base, merged, touched, root, id, partCols,
+        sortCols, changeLogKeys = if (changeLog) keyCols else Nil))
     }
-    val merged = Cdc.apply(base, batch, keyCols, operCol, versionCol)
-    commitPartitionsFrom(baseM, merged, touched, root, id, partCols, keep,
-      sortCols, changeLogKeys = if (changeLog) keyCols else Nil)
-  }
 
   /** KEYED POINT LOOKUP: the rows of `keys` (which must carry the
     * table's `partCols`, computed with the same key-derived expression
@@ -6286,24 +6212,24 @@ object CowTable {
       effCol: String,
       operCol: String = "oper",
       keep: Int = 2,
-      sortCols: Seq[String] = Nil): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val touched = touchedKeys(changes, partCols)
-    val baseM = currentManifest(spark, root)
-    val base = baseM match {
-      case None =>
-        val dataCols = changes.columns.toSeq
-          .filterNot(c => c == operCol || c == effCol)
-        changes.select(dataCols.map(col) ++ Seq(
-          col(effCol).as("effective_from"),
-          lit(null).cast(changes.schema(effCol).dataType).as("effective_to"),
-          lit(true).as("is_current")): _*).limit(0)
-      case Some(m) => baseFor(spark, root, m, touched)
+      sortCols: Seq[String] = Nil): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val touched = touchedKeys(changes, partCols)
+      val before = base match {
+        case None =>
+          val dataCols = changes.columns.toSeq
+            .filterNot(c => c == operCol || c == effCol)
+          changes.select(dataCols.map(col) ++ Seq(
+            col(effCol).as("effective_from"),
+            lit(null).cast(changes.schema(effCol).dataType)
+              .as("effective_to"),
+            lit(true).as("is_current")): _*).limit(0)
+        case Some(m) => baseFor(spark, root, m, touched)
+      }
+      val merged = Merge.scd2Cdc(before, changes, keyCols, effCol, operCol)
+      Some(rewriteCommit(base, merged, touched, root, id, partCols,
+        sortCols))
     }
-    val merged = Merge.scd2Cdc(base, changes, keyCols, effCol, operCol)
-    commitPartitionsFrom(baseM, merged, touched, root, id, partCols, keep,
-      sortCols)
-  }
 
   /** BUCKET-SCOPED SCD-2 RESTATEMENT — [[Merge.scd2Restate]] composed
     * with the COW table, the composition its scaladoc promises: only
@@ -6322,15 +6248,14 @@ object CowTable {
       partCols: Seq[String],
       effCol: String,
       operCol: String = "oper",
-      keep: Int = 2): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val touched = touchedKeys(corrections, partCols)
-    val restated = Merge.scd2Restate(
-      baseFor(spark, root, m, touched), corrections, keyCols, effCol, operCol)
-    commitPartitionsFrom(Some(m), restated, touched, root, id, partCols, keep)
-  }
+      keep: Int = 2): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      val touched = touchedKeys(corrections, partCols)
+      val restated = Merge.scd2Restate(baseFor(spark, root, m, touched),
+        corrections, keyCols, effCol, operCol)
+      Some(rewriteCommit(base, restated, touched, root, id, partCols))
+    }
 
   /** SNAPSHOT HISTORY, metadata-only: one row per retained committed
     * snapshot — data-file / tombstone-file / deletion-vector counts,
@@ -6506,19 +6431,14 @@ object CowTable {
       keyCols: Seq[String],
       partCols: Seq[String],
       keep: Int = 2,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    require(m.partCols == partCols,
-      s"partitioning mismatch: table has ${m.partCols}, got $partCols")
-    val cols = (keyCols ++ partCols).distinct
-    cols.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"tombstone column $c is not a table column"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false // ID-only recheck: FS listing, no Spark job
+      changeLog: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      require(m.partCols == partCols,
+        s"partitioning mismatch: table has ${m.partCols}, got $partCols")
+      val cols = (keyCols ++ partCols).distinct
+      cols.foreach(c => require(m.schema.fieldNames.contains(c),
+        s"tombstone column $c is not a table column"))
       val tombSchema = StructType(cols.map(c => m.schema(c)))
       val tombDir = s"$root/$BatchPrefix$id/__tomb"
       val distinctKeys = keys.select(cols.map(col): _*).distinct()
@@ -6527,42 +6447,19 @@ object CowTable {
       val fresh = collectEntries(spark, tombDir, id, tombSchema, partCols,
         colMap = m.colMap)
         .map(_.copy(kind = KindTombstone))
+      // the batch's changelog is pure D rows: the CURRENT visible state
+      // of the keys being tombstoned (before-images), read from only
+      // the touched partitions
       val stagedLog =
         if (!changeLog) None
-        else {
-          // the batch's changelog is pure D rows: the CURRENT visible
-          // state of the keys being tombstoned (before-images), read
-          // from only the touched partitions
-          val touched = touchedKeys(keys, partCols)
-          val before = resolved(spark, root, m,
-            m.files.filter(f => touched.contains(m.partKeyOf(f))))
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          before
+        else Some(stageChangeRows(spark, root, id, m,
+          baseFor(spark, root, m, touchedKeys(keys, partCols))
             .join(broadcast(keys.select(keyCols.map(col): _*).distinct()),
-              keyCols, "left_semi")
-            .withColumn(ChangeOper, lit("D"))
-            // canonical sidecar column order: table schema then _oper
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        // deletes only ADD: every previous entry (data and tombstones)
-        // carries over verbatim — the adds-only delta shape
-        if (deltaEligible(Some(m), partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
-  }
+              keyCols, "left_semi") -> "D"))
+      // deletes only ADD: every previous entry (data and tombstones)
+      // carries over verbatim — the adds-only delta shape
+      Some(addingTo(m, fresh, stagedLog))
+    }
 
   /** KEYED delete as POSITIONAL deletion vectors — the positional
     * twin of [[deleteKeysMor]], with a sharper CONTRACT as well as
@@ -6596,60 +6493,25 @@ object CowTable {
       keyCols: Seq[String],
       partCols: Seq[String],
       keep: Int = 2,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    require(m.partCols == partCols,
-      s"partitioning mismatch: table has ${m.partCols}, got $partCols")
-    require(keyCols.nonEmpty, "keyed delete needs at least one key column")
-    keyCols.foreach(c => require(m.schema.fieldNames.contains(c),
-      s"key column $c is not a table column"))
-    Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
-      s"DV delete: partition column '$c' collides with the deletion-" +
-        "vector sidecar schema — use deleteKeysMor for this table"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+      changeLog: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      require(m.partCols == partCols,
+        s"partitioning mismatch: table has ${m.partCols}, got $partCols")
+      require(keyCols.nonEmpty, "keyed delete needs at least one key column")
+      keyCols.foreach(c => require(m.schema.fieldNames.contains(c),
+        s"key column $c is not a table column"))
+      requireDvPartCols(m, "delete", "deleteKeysMor")
       val touched = touchedKeys(keys, partCols)
       val candidates = m.files.filter(f => touched.contains(m.partKeyOf(f)))
-      if (candidates.isEmpty) return true // no partition can match — id unconsumed
-      val visible = visibleWithPos(spark, root, m, candidates, Nil)
-      val k = broadcast(keys.select(keyCols.map(col): _*).distinct())
-      val matched0 = visible.join(k,
-        keyCols.map(c => visible(c) <=> k(c)).reduce(_ && _), "left_semi")
-      val matched = if (changeLog) matched0.localCheckpoint() else matched0
-      val fresh = writeDvSidecar(spark, root, m, id, matched)
-      if (fresh.isEmpty) {
-        hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
-        return true // no row matched — id unconsumed
+      if (candidates.isEmpty) None // no partition can match — id unconsumed
+      else {
+        val visible = visibleWithPos(spark, root, m, candidates, Nil)
+        val k = broadcast(keys.select(keyCols.map(col): _*).distinct())
+        dvDelete(spark, root, m, id, changeLog, visible.join(k,
+          keyCols.map(c => visible(c) <=> k(c)).reduce(_ && _), "left_semi"))
       }
-      val stagedLog =
-        if (!changeLog) None
-        else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          matched
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        if (deltaEligible(Some(m), partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
-  }
+    }
 
   /** PREDICATE MERGE-ON-READ delete — deletion-vector economics for
     * `DELETE FROM t WHERE cond`: where [[deleteWhere]] REWRITES every
@@ -6684,62 +6546,39 @@ object CowTable {
       cond: Column,
       prune: Seq[CowRange] = Nil,
       keep: Int = 2,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+      changeLog: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true // nothing can match — id unconsumed
-      val matches = resolved(spark, root, m, candidates, prune).where(cond)
-      val tombDir = s"$root/$BatchPrefix$id/__tomb"
-      writeBatch(matches, tombDir, m.partCols, Nil, colMap = m.colMap)
-      val fresh = collectEntries(spark, tombDir, id, m.schema, m.partCols,
-        colMap = m.colMap)
-        .map(_.copy(kind = KindTombstone))
-      if (fresh.isEmpty) {
-        // no row matched: leave no uncommitted batch dir behind and
-        // return with the id unconsumed, like deleteWhere's empty case
-        hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
-        return true
-      }
-      val stagedLog =
-        if (!changeLog) None
-        else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          // read the WRITTEN tombstones back rather than re-running the
-          // candidate scan: one pass over O(matched rows), and the
-          // sidecar is bit-identical to what readers will subtract
-          val stub = CowManifest(id, m.partCols, m.schemaDdl,
-            fresh.map(_.copy(kind = KindData)),
-            m.colMap, m.retiredPhys)
-          dfFor(spark, root, stub, stub.files)
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
+      if (candidates.isEmpty) None // nothing can match — id unconsumed
+      else {
+        val matches = resolved(spark, root, m, candidates, prune).where(cond)
+        val tombDir = s"$root/$BatchPrefix$id/__tomb"
+        writeBatch(matches, tombDir, m.partCols, Nil, colMap = m.colMap)
+        val fresh = collectEntries(spark, tombDir, id, m.schema, m.partCols,
+          colMap = m.colMap)
+          .map(_.copy(kind = KindTombstone))
+        if (fresh.isEmpty) {
+          // no row matched: leave no uncommitted batch dir behind and
+          // return with the id unconsumed, like deleteWhere's empty case
+          hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
+          None
+        } else {
+          // the changelog reads the WRITTEN tombstones back rather than
+          // re-running the candidate scan: one pass over O(matched
+          // rows), and the sidecar is bit-identical to what readers
+          // will subtract
+          val stagedLog =
+            if (!changeLog) None
+            else Some(stageChangeRows(spark, root, id, m,
+              writtenRows(spark, root, m, id, fresh) -> "D"))
+          // a MOR delete only ADDS tombstones: every previous entry
+          // (data and tombstones) carries over verbatim
+          Some(addingTo(m, fresh, stagedLog))
         }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        // a MOR delete only ADDS tombstones: every previous entry
-        // (data and tombstones) carries over verbatim
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
       }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
-  }
+    }
 
   private val DvFpCol = "__dv_fp"
   private val DvPosCol = "__dv_pos"
@@ -6876,60 +6715,50 @@ object CowTable {
       condOf: DataFrame => Column,
       prune: Seq[CowRange] = Nil,
       keep: Int = 2,
-      changeLog: Boolean = false): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    // sidecar columns ride next to the partition columns in the DV
-    // files — a partition column named like them cannot be represented
-    Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
-      s"DV delete: partition column '$c' collides with the deletion-" +
-        "vector sidecar schema — use deleteWhereMor for this table"))
-    var vacuumKnown: Map[Long, Seq[String]] = Map.empty
-    acquireCommitLock(spark, root, id)
-    try {
-      if (committedIds(spark, root).exists(_ >= id)) return false
+      changeLog: Boolean = false): Boolean =
+    transact(spark, root, id, keep) { base =>
+      val m = headOf(base, root)
+      requireDvPartCols(m, "delete", "deleteWhereMor")
       val candidates =
         if (prune.isEmpty) m.files else keptFiles(spark, m, prune)
-      if (candidates.isEmpty) return true // nothing can match — id unconsumed
-      val visible = visibleWithPos(spark, root, m, candidates, prune)
-      val matched0 = visible.where(coalesce(condOf(visible), lit(false)))
-      // two consumers when a changelog is kept (the DV aggregation and
-      // the D-row sidecar) — pin so the candidate scan runs once
-      val matched = if (changeLog) matched0.localCheckpoint() else matched0
-      val fresh = writeDvSidecar(spark, root, m, id, matched)
-      if (fresh.isEmpty) {
-        hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
-        return true // no row matched — id unconsumed
+      if (candidates.isEmpty) None // nothing can match — id unconsumed
+      else {
+        val visible = visibleWithPos(spark, root, m, candidates, prune)
+        dvDelete(spark, root, m, id, changeLog,
+          visible.where(coalesce(condOf(visible), lit(false))))
       }
-      val stagedLog =
-        if (!changeLog) None
-        else {
-          val staging = new Path(
-            s"$root/$ChangesDir/.tmp-$id-${java.util.UUID.randomUUID()}")
-          // the matched rows ARE the before-images — pure D, no diff
-          matched
-            .withColumn(ChangeOper, lit("D"))
-            .select((m.schema.fieldNames.toSeq :+ ChangeOper).map(col): _*)
-            .write.mode("overwrite").parquet(staging.toString)
-          Some(staging)
-        }
-      commitManifest(spark, root, id, Some(m.id), stagedLog) {
-        // a DV delete only ADDS sidecars: every previous entry (data,
-        // tombstones, older DVs) carries over verbatim
-        if (deltaEligible(Some(m), m.partCols, statsPreserved = true))
-          writeManifestDelta(spark, root, id, m, m.schemaDdl,
-            fresh, Set.empty, mappingOf(Some(m)))
-        else writeManifest(spark, root, id, m.partCols, m.schemaDdl,
-          m.allFiles ++ fresh, mappingOf(Some(m)))
-      }
-      vacuumKnown = Map(
-        id -> (m.allFiles ++ fresh).map(_.path),
-        m.id -> m.allFiles.map(_.path))
-    } finally releaseCommitLock(spark, root, id)
-    vacuum(spark, root, keep, vacuumKnown)
-    true
+    }
+
+  /** The actions of a positional delete of `matched` (a
+    * [[visibleWithPos]] frame, already filtered to the rows to delete):
+    * the DV sidecar, plus the matched rows as a pure-D changelog when
+    * `changeLog` — the matched rows ARE the before-images, no diff.
+    * None (batch dir removed, id unconsumed) when no row matched. A DV
+    * delete only ADDS sidecars: every previous entry (data,
+    * tombstones, older DVs) carries over verbatim.
+    */
+  private def dvDelete(spark: SparkSession, root: String, m: CowManifest,
+      id: Long, changeLog: Boolean, matched0: DataFrame): Option[CowCommit] = {
+    // two consumers when a changelog is kept (the DV aggregation and
+    // the D-row sidecar) — pin so the candidate scan runs once
+    val matched = if (changeLog) matched0.localCheckpoint() else matched0
+    val fresh = writeDvSidecar(spark, root, m, id, matched)
+    if (fresh.isEmpty) {
+      hfs(spark, root).delete(new Path(s"$root/$BatchPrefix$id"), true)
+      None // no row matched — id unconsumed
+    } else Some(addingTo(m, fresh,
+      if (!changeLog) None
+      else Some(stageChangeRows(spark, root, id, m, matched -> "D"))))
   }
+
+  /** Sidecar columns ride next to the partition columns in the DV
+    * files — a partition column named like them cannot be represented.
+    */
+  private def requireDvPartCols(
+      m: CowManifest, what: String, alternative: String): Unit =
+    Seq("path", "positions").foreach(c => require(!m.partCols.contains(c),
+      s"DV $what: partition column '$c' collides with the deletion-" +
+        s"vector sidecar schema — use $alternative for this table"))
 
   /** Retire all outstanding tombstones AND positional deletion vectors
     * by rewriting exactly the partitions that have any: the COW state
@@ -6939,20 +6768,20 @@ object CowTable {
     */
   def foldTombstones(
       spark: SparkSession, root: String, id: Long, keep: Int = 2,
-      changeLogKeys: Seq[String] = Nil): Boolean = {
-    if (committedIds(spark, root).exists(_ >= id)) return false
-    val m = currentManifest(spark, root).getOrElse(return false)
-    val touched = (m.tombstones ++ m.dvs).map(m.partKeyOf).toSet
-    if (touched.isEmpty) return false
-    val rewrite = resolved(spark, root, m,
-      m.files.filter(f => touched.contains(m.partKeyOf(f))))
-    // a fold changes no visible rows, so its sidecar (when the table
-    // keeps a write-time feed) is the EMPTY changelog — the feed range
-    // stays servable across folds
-    commitPartitionsFrom(Some(m), rewrite, touched, root, id, m.partCols,
-      keep, changeLogKeys = changeLogKeys)
-    true
-  }
+      changeLogKeys: Seq[String] = Nil): Boolean =
+    maintain(spark, root, id, keep) { m =>
+      val touched = (m.tombstones ++ m.dvs).map(m.partKeyOf).toSet
+      if (touched.isEmpty) None
+      else {
+        val rewrite = resolved(spark, root, m,
+          m.files.filter(f => touched.contains(m.partKeyOf(f))))
+        // a fold changes no visible rows, so its sidecar (when the table
+        // keeps a write-time feed) is the EMPTY changelog — the feed
+        // range stays servable across folds
+        Some(rewriteCommit(Some(m), rewrite, touched, root, id, m.partCols,
+          changeLogKeys = changeLogKeys))
+      }
+    } == MaintCommitted
 
   // -------------------------------------------------------------------
   // Retention

@@ -90,6 +90,232 @@ class CowTableSpec extends SparkSpec {
       == content)
   }
 
+  // ---- the commit path, over every public entry point ----
+
+  private def fsOf(root: String) =
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def rowsIn(lo: Long, hi: Long): DataFrame =
+    spark.range(lo, hi).select($"id", ($"id" % 4).as("p"),
+      ($"id" * 10).as("v"))
+
+  /** Snapshots 1-3: a full commit, an append (every partition now
+    * holds two files), and a DV delete (outstanding debt).
+    */
+  private def commitSetup(root: String, log: Boolean): Unit = {
+    val keys = if (log) Seq("id") else Nil
+    CowTable.commitFull(rowsIn(0, 40), root, 1L, Seq("p"), keep = 10,
+      changeLogKeys = keys)
+    CowTable.commitAppend(rowsIn(40, 60), root, 2L, Seq("p"), keep = 10,
+      changeLogKeys = keys)
+    CowTable.deleteWhereDv(spark, root, 3L, col("id") === 7L, keep = 10,
+      changeLog = log)
+  }
+
+  /** Lease files (`_commit-<id>.lock`, `_commit.lock`) left at root. */
+  private def leases(root: String): Seq[String] =
+    fsOf(root).listStatus(new Path(root)).toSeq.map(_.getPath.getName)
+      .filter(n => n.startsWith("_commit") && n.endsWith(".lock"))
+
+  /** Nothing of commit `id` is visible: no manifest, no published or
+    * staged change-log sidecar.
+    */
+  private def assertNothingPublished(root: String, id: Long): Unit = {
+    val fs = fsOf(root)
+    assert(!fs.exists(new Path(s"$root/manifest-$id")),
+      s"a failed commit $id published a manifest")
+    val changes = new Path(s"$root/_changes")
+    val logs = if (!fs.exists(changes)) Nil
+      else fs.listStatus(changes).toSeq.map(_.getPath.getName)
+    assert(!logs.exists(n => n == id.toString || n.startsWith(s".tmp-$id-")),
+      s"a failed commit $id left a change-log sidecar: $logs")
+  }
+
+  /** Run `body` with `competitor` landing a commit at `root` between
+    * the transaction's build and its publish (once).
+    */
+  private def racing[T](root: String)(competitor: => Unit)(body: => T): T = {
+    CowTable.beforePublishForTest = r => if (r == root) {
+      CowTable.beforePublishForTest = _ => ()
+      competitor
+    }
+    try body finally CowTable.beforePublishForTest = _ => ()
+  }
+
+  private def competingAppend(root: String, id: Long, log: Boolean): Unit =
+    assert(CowTable.commitAppend(rowsIn(200 + id, 201 + id), root, id,
+      Seq("p"), keep = 10, changeLogKeys = if (log) Seq("id") else Nil))
+
+  /** Every Boolean commit entry point: (name, table keeps a change log,
+    * commit at (root, id)). The change log is on wherever the entry
+    * point can emit one, so a failed commit has a sidecar to discard.
+    */
+  private def commitEntryPoints: Seq[(String, Boolean, (String, Long) => Boolean)] = {
+    import graft.operators.{MatchedUpdate, NotMatchedInsert}
+    val id = Seq("id")
+    val p = Seq("p")
+    Seq(
+      ("commitPartitions", true, (r: String, i: Long) =>
+        CowTable.commitPartitions(rowsIn(0, 40).where($"p" === 0L),
+          Set(CowTable.partKey(p, Map("p" -> "0"))), r, i, p, keep = 10,
+          changeLogKeys = id)),
+      ("commitFull", true, (r: String, i: Long) =>
+        CowTable.commitFull(rowsIn(0, 30), r, i, p, keep = 10,
+          changeLogKeys = id)),
+      ("commitAppend", true, (r: String, i: Long) =>
+        CowTable.commitAppend(rowsIn(100, 110), r, i, p, keep = 10,
+          changeLogKeys = id)),
+      ("upsert", true, (r: String, i: Long) =>
+        CowTable.upsert(spark, r, i, rowsIn(55, 65), id, p, keep = 10,
+          changeLog = true)),
+      ("mergeInto", true, (r: String, i: Long) =>
+        CowTable.mergeInto(spark, r, i, rowsIn(55, 65), id, p,
+          Seq(MatchedUpdate(Map("v" -> "s.v + 1")), NotMatchedInsert()),
+          keep = 10, changeLogKeys = id)),
+      ("applyCdc", true, (r: String, i: Long) =>
+        CowTable.applyCdc(spark, r, i,
+          rowsIn(55, 65).withColumn("oper", lit("U")), id, p, keep = 10,
+          changeLog = true)),
+      ("deleteWhere", true, (r: String, i: Long) =>
+        CowTable.deleteWhere(spark, r, i, $"id" < 5L, keep = 10,
+          changeLogKeys = id)),
+      ("updateWhere", true, (r: String, i: Long) =>
+        CowTable.updateWhere(spark, r, i, $"id" < 5L, Map("v" -> lit(-1L)),
+          keep = 10, changeLogKeys = id)),
+      ("compactPartitions", true, (r: String, i: Long) =>
+        CowTable.compactPartitions(spark, r, i, keep = 10,
+          changeLogKeys = id)),
+      ("optimizeZorder", true, (r: String, i: Long) =>
+        CowTable.optimizeZorder(spark, r, i, Seq("v"), keep = 10,
+          changeLogKeys = id)),
+      ("foldTombstones", true, (r: String, i: Long) =>
+        CowTable.foldTombstones(spark, r, i, keep = 10, changeLogKeys = id)),
+      ("updateWhereMor", true, (r: String, i: Long) =>
+        CowTable.updateWhereMor(spark, r, i, $"id" < 5L,
+          Map("v" -> lit(-1L)), keep = 10, changeLogKeys = id)),
+      ("updateWhereDv", true, (r: String, i: Long) =>
+        CowTable.updateWhereDv(spark, r, i, $"id" < 5L,
+          Map("v" -> lit(-1L)), keep = 10, changeLogKeys = id)),
+      ("deleteKeysMor", true, (r: String, i: Long) =>
+        CowTable.deleteKeysMor(spark, r, i, rowsIn(0, 5), id, p, keep = 10,
+          changeLog = true)),
+      ("deleteKeysDv", true, (r: String, i: Long) =>
+        CowTable.deleteKeysDv(spark, r, i, rowsIn(0, 5), id, p, keep = 10,
+          changeLog = true)),
+      ("deleteWhereMor", true, (r: String, i: Long) =>
+        CowTable.deleteWhereMor(spark, r, i, $"id" < 5L, keep = 10,
+          changeLog = true)),
+      ("deleteWhereDv", true, (r: String, i: Long) =>
+        CowTable.deleteWhereDv(spark, r, i, $"id" < 5L, keep = 10,
+          changeLog = true)),
+      // column renames and drops refuse while sidecars are retained
+      ("evolveSchema", false, (r: String, i: Long) =>
+        CowTable.evolveSchema(spark, r, i,
+          CowTable.currentManifest(spark, r).get.schema
+            .add("w", "string", nullable = true), keep = 10)),
+      ("renameColumn", false, (r: String, i: Long) =>
+        CowTable.renameColumn(spark, r, i, "v", "v2", keep = 10)),
+      ("reorderColumn", false, (r: String, i: Long) =>
+        CowTable.reorderColumn(spark, r, i, "v", None, keep = 10)),
+      ("dropColumn", false, (r: String, i: Long) =>
+        CowTable.dropColumn(spark, r, i, "v", keep = 10)))
+  }
+
+  test("every commit entry point: replaying a committed id returns " +
+      "false and changes no file or row") {
+    val roots = Map(true -> tmp(), false -> tmp())
+    roots.foreach { case (log, r) => commitSetup(r, log) }
+    commitEntryPoints.foreach { case (name, log, commit) =>
+      val root = roots(log)
+      val files = dataFileState(root)
+      val rows = CowTable.read(spark, root).get.orderBy("id").collect().toSeq
+      Seq(3L, 2L).foreach(i =>
+        assert(!commit(root, i), s"$name replayed committed id $i"))
+      assert(dataFileState(root) == files, s"$name replay touched files")
+      assert(CowTable.read(spark, root).get.orderBy("id").collect().toSeq
+        == rows, s"$name replay changed rows")
+      assert(CowTable.committedIds(spark, root) == Seq(1L, 2L, 3L), name)
+      assert(leases(root).isEmpty, s"$name replay left ${leases(root)}")
+    }
+  }
+
+  test("every commit entry point: a commit landing on its base fails " +
+      "it with nothing published and no lease left; the retry commits " +
+      "and leaves no lease either") {
+    import graft.sinks.CowConcurrentCommitException
+    commitEntryPoints.foreach { case (name, log, commit) =>
+      val root = tmp()
+      commitSetup(root, log)
+      // commit 4 lands after the build of commit 5, before its publish
+      intercept[CowConcurrentCommitException] {
+        racing(root)(competingAppend(root, 4L, log))(commit(root, 5L))
+      }
+      assert(CowTable.committedIds(spark, root) == Seq(1L, 2L, 3L, 4L), name)
+      assertNothingPublished(root, 5L)
+      assert(leases(root).isEmpty, s"$name stale failure left ${leases(root)}")
+      assert(commit(root, 6L), s"$name retry did not commit")
+      assert(CowTable.committedIds(spark, root).last == 6L, name)
+      assert(leases(root).isEmpty, s"$name commit left ${leases(root)}")
+    }
+  }
+
+  test("restore, shallow clone and WAP stage/publish share the commit " +
+      "path: a racing commit fails them with nothing published and no " +
+      "lease left") {
+    import graft.sinks.CowConcurrentCommitException
+    // restore leases head+1; the competitor takes the id above it
+    val root = tmp()
+    commitSetup(root, log = false)
+    intercept[CowConcurrentCommitException] {
+      racing(root)(competingAppend(root, 5L, log = false))(
+        CowTable.restore(spark, root, 1L, keep = 10))
+    }
+    assertNothingPublished(root, 4L)
+    assert(leases(root).isEmpty, s"restore left ${leases(root)}")
+    assert(CowTable.restore(spark, root, 1L, keep = 10) == 6L)
+    assert(CowTable.read(spark, root).get.count() == 40L)
+    assert(leases(root).isEmpty, s"restore left ${leases(root)}")
+
+    // shallow clone: the target's first commit races another writer
+    val src = tmp()
+    CowTable.commitFull(rowsIn(0, 40), src, 1L, Seq("p"))
+    val target = s"${tmp()}/t"
+    intercept[CowConcurrentCommitException] {
+      racing(target)(competingAppend(target, 2L, log = false))(
+        CowTable.shallowClone(spark, src, target))
+    }
+    assertNothingPublished(target, 1L)
+    assert(leases(target).isEmpty, s"clone left ${leases(target)}")
+    val target2 = s"${tmp()}/t"
+    assert(CowTable.shallowClone(spark, src, target2) == 1L)
+    assert(leases(target2).isEmpty, s"clone left ${leases(target2)}")
+
+    // WAP: a stage of a committed id is refused; a publish whose base
+    // moved fails with nothing published
+    val wap = tmp()
+    commitSetup(wap, log = true)
+    intercept[IllegalArgumentException] {
+      CowTable.stageAppend(rowsIn(300, 310), wap, 3L, Seq("p"),
+        changeLogKeys = Seq("id"))
+    }
+    CowTable.stageAppend(rowsIn(300, 310), wap, 5L, Seq("p"),
+      changeLogKeys = Seq("id"))
+    assert(leases(wap).isEmpty, s"stage left ${leases(wap)}")
+    intercept[CowConcurrentCommitException] {
+      racing(wap)(competingAppend(wap, 4L, log = true))(
+        CowTable.publishStaged(spark, wap, 5L, keep = 10))
+    }
+    assertNothingPublished(wap, 5L)
+    assert(leases(wap).isEmpty, s"publish left ${leases(wap)}")
+    CowTable.discardStaged(spark, wap, 5L)
+    CowTable.stageAppend(rowsIn(300, 310), wap, 6L, Seq("p"),
+      changeLogKeys = Seq("id"))
+    CowTable.publishStaged(spark, wap, 6L, keep = 10)
+    assert(CowTable.committedIds(spark, wap).last == 6L)
+    assert(CowTable.hasChangeLog(spark, wap, 6L))
+    assert(leases(wap).isEmpty, s"publish left ${leases(wap)}")
+  }
+
   test("CDC apply through COW: D empties a partition (entry dropped), " +
       "I/U upsert; NULL partition value round-trips") {
     val root = tmp()
@@ -961,11 +1187,14 @@ class CowTableSpec extends SparkSpec {
     fs.create(new Path(s"$root/_commit.lock"), false).close()
     sys.props("graft.cow.manifestLockWaitSec") = "1"
     try {
-      intercept[CowConcurrentCommitException] {
+      val e = intercept[CowConcurrentCommitException] {
         CowTable.upsert(spark, root, 2L,
           Seq((1L, "p1", "x", 0.0)).toDF("id", "part", "name", "score"),
           Seq("id"), Seq("part"), keep = 10)
       }
+      // the message names the CONFIGURED wait, not the default
+      assert(e.getMessage.contains("manifest lock held for >1s"),
+        e.getMessage)
     } finally sys.props -= "graft.cow.manifestLockWaitSec"
     assert(CowTable.committedIds(spark, root) == Seq(1L))
     assert(CowTable.breakManifestLock(spark, root))
@@ -1104,31 +1333,6 @@ class CowTableSpec extends SparkSpec {
       .where($"id" === 1L).select("score").as[Double].head() == 11.0)
     assert(CowTable.read(spark, root).get
       .where($"id" === 1L).select("score").as[Double].head() == 12.0)
-  }
-
-  test("single-writer fast path: commits work without lock files and " +
-      "based-on verification still rejects a stale base") {
-    import graft.sinks.CowConcurrentCommitException
-    val root = tmp()
-    System.setProperty("graft.cow.singleWriter", "true")
-    try {
-      CowTable.commitFull(base3, root, 1L, Seq("part"))
-      val stale = CowTable.currentManifest(spark, root)
-      CowTable.upsert(spark, root, 2L,
-        Seq((1L, "p1", "a", 77.0)).toDF("id", "part", "name", "score"),
-        Seq("id"), Seq("part"))
-      // the flag only removes lock-file round-trips; the listing-based
-      // verification still fails a commit built from a stale manifest
-      intercept[CowConcurrentCommitException] {
-        CowTable.commitPartitionsFrom(stale,
-          Seq((1L, "p1", "a", 10.0)).toDF("id", "part", "name", "score"),
-          Set(CowTable.partKey(Seq("part"), Map("part" -> "p1"))),
-          root, 3L, Seq("part"))
-      }
-      assert(CowTable.read(spark, root).get.where($"id" === 1L)
-        .select("score").as[Double].head() == 77.0)
-      assert(CowTable.committedIds(spark, root) == Seq(1L, 2L))
-    } finally System.clearProperty("graft.cow.singleWriter")
   }
 
   test("change-logged append of an EXISTING key skips the pure-I " +

@@ -207,4 +207,40 @@ class LazyDebtStatsSpec extends SparkSpec {
       "a cold filtered read of a bucketed table must prune-load " +
         "(round-17: bucket specs no longer force the eager parse)")
   }
+
+  test("the per-root spec counters are monotonic: past 1024 keys a " +
+      "cold parse and a cold debt read keep every earlier count") {
+    val ns = freshNs("mono")
+    val root = s"${spark.conf.get("spark.sql.catalog.cow.warehouse")}/$ns/t"
+    spark.sql(s"CREATE TABLE cow.$ns.t (id BIGINT, p BIGINT) " +
+      "PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO cow.$ns.t SELECT id, id % 20 FROM range(2000)")
+    require(CowTable.deleteWhereDv(spark, root, 3L,
+      col("id") % 7 === 0, keep = 10))
+    val counters = Seq(CowTable.manifestParses, CowTable.prunedLoads,
+      CowTable.entriesMaterialized, CowTable.sidecarLoads)
+    // one cold head parse plus one cold debt read (pruned data entries
+    // and the kind≠data sidecar slice) bump all four counters
+    def coldReads(): Unit = {
+      goCold()
+      assert(CowTable.currentManifest(spark, root).get.id == 3L)
+      goCold()
+      spark.table(s"cow.$ns.t").where($"p" === 3L).collect()
+    }
+    coldReads()
+    val before = counters.map(cnt(_, root))
+    assert(before.forall(_ > 0), s"setup must bump every counter: $before")
+    val fillers = (0 until 1100).map(i => s"filler-root-$i")
+    try {
+      counters.foreach(c => fillers.foreach(c.put(_, 1L)))
+      coldReads()
+      val after = counters.map(cnt(_, root))
+      before.zip(after).foreach { case (b, a) =>
+        assert(a > b, s"a counter past 1024 keys lost its history: $b -> $a")
+      }
+      counters.foreach(c => assert(fillers.forall(c.get(_) == 1L),
+        "filler entries must survive the later increments"))
+    } finally counters.foreach(c => fillers.foreach(c.remove(_)))
+    spark.sql(s"DROP NAMESPACE cow.$ns CASCADE")
+  }
 }

@@ -30,7 +30,7 @@ class RetryKeepGuardSpec extends SparkSpec {
     fs.create(marker, false).close()
 
     val batch = Seq((10L, "w")).toDF("id", "v")
-    // explicit-id append path (commitAppendOnto, protectStage = false)
+    // explicit-id append path (appendCommit, protectStage = false)
     intercept[CowConcurrentCommitException] {
       CowTable.commitAppend(batch, root, 2L, Nil)
     }
